@@ -1,5 +1,5 @@
-"""Distributed connected components — the clustering step of a dedup
-pipeline.
+"""Distributed graph operators over near-duplicate edge lists — the
+clustering step of a dedup pipeline and its graph analytics.
 
 Near-duplicate detection (dedup.py: MinHash-LSH / SimHash / exact Jaccard)
 emits PAIRS.  Turning pairs into deletion decisions needs the transitive
@@ -12,30 +12,104 @@ The reference has no graph surface at all; this is north-star scope
 near-dup edges — cf. the map-reduce CC literature: hash-min with pointer
 jumping, large-star/small-star).
 
-Algorithm: hash-min label propagation + path-halving pointer jump.
-
-* ``label(v)`` starts as ``v``; each round takes the min over the
-  neighborhood, then jumps ``label(v) <- label(label(v))``.  Labels only
-  decrease, so ``sum(label)`` is a strictly-decreasing convergence
-  certificate — one scalar aggregate per round, no change-join.
-* The pointer jump gives union-find-style path halving: convergence in
-  O(log(diameter)) rounds instead of O(diameter) — a 1M-node chain
-  converges in ~20 rounds, not 1M.
-* Per round: one shuffle of the (static) edge list on ``nbr`` + two
-  shuffles of the node-sized label table.  ``localCheckpoint`` after every
-  round caps lineage (iterative plans otherwise nest each pass inside the
-  next — see operators/similarity.py ivf_train_centroids for the same
-  discipline).
+Every iterative operator here is a ``step(state, round)`` handed to
+:func:`operators.fixpoint.iterate`, which owns lineage cuts, convergence
+and checkpoint release (cost model in that module).  The undirected
+operators share one symmetrized edge list, :func:`_symmetric`.
 
 At 100 TB scale: |edges| >> |nodes|; pre-partition the edge list by
 ``nbr`` (repartition or bucketed write) so the per-round propagation join
-co-locates with the label table and only the label side reshuffles.
+co-locates with the node-sized state and only the state side reshuffles.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
+
+from aws_genaric_datapipeline_spark.operators import fixpoint
+
+
+def _symmetric(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    weight: str | None = None,
+    seeds: DataFrame | None = None,
+) -> DataFrame:
+    """The undirected edge list ``(node, nbr)``: both directions of every
+    input edge, input self-loops dropped, duplicates removed.  One explode
+    reads the input once, so an expensive edge pipeline (an exact-Jaccard
+    self-join) runs once without a pin of its own.
+
+    With ``seeds`` the rows also carry an integer weight ``w`` (the
+    ``weight`` column, or 1 per hop) plus a zero-weight self-loop for every
+    node and every seed: a relaxation round over them carries each node's
+    previous distance forward through the join itself, so it reads the
+    previous state once (see :func:`_relax`)."""
+    def row(a: str, b: str, w=None):
+        ends = (F.col(a).alias("node"), F.col(b).alias("nbr"))
+        return F.struct(*ends) if w is None else F.struct(*ends, w.cast("bigint").alias("w"))
+
+    if seeds is None:
+        sym = edges.select(F.explode(F.array(row(src, dst), row(dst, src))).alias("e"))
+        return sym.select("e.*").where(F.col("node") != F.col("nbr")).distinct()
+    w = F.col(weight) if weight else F.lit(1)
+    rows = [row(src, dst, w), row(dst, src, w), row(src, src, F.lit(0)), row(dst, dst, F.lit(0))]
+    sym = edges.select(F.explode(F.array(*rows)).alias("e")).select("e.*")
+    loops = _sources(seeds).select("node", F.col("node").alias("nbr"), F.col("dist").alias("w"))
+    real = (F.col("node") != F.col("nbr")) | (F.col("w") == 0)
+    return sym.where(real).unionByName(loops).distinct()
+
+
+def _sources(seeds: DataFrame) -> DataFrame:
+    """Distance-0 state ``(node, dist)`` of a single-column seed frame."""
+    return (
+        seeds.select(F.col(seeds.columns[0]).cast("bigint").alias("node"))
+        .distinct()
+        .withColumn("dist", F.lit(0).cast("bigint"))
+    )
+
+
+def _relax(sym: DataFrame, dist: DataFrame, hop: int | None = None) -> DataFrame:
+    """One Bellman-Ford round over ``_symmetric(..., seeds=)`` rows: ONE
+    join of the static edge list against the distance frame + a
+    map-side-combining min — the Pregel SSSP cost model.  Each node's own
+    zero-weight self-loop carries its distance forward, so the round
+    reads ``dist`` once (no union branch).
+
+    With ``hop`` (BFS), only the FRONTIER — nodes first reached in round
+    ``hop - 1`` — expands along real edges; every other node emits its
+    self-loop row only, so the join's output is frontier edges + one row
+    per visited node, never the visited set's whole neighborhood."""
+    joined = sym.join(dist, "node")
+    if hop is not None:
+        joined = joined.where((F.col("w") == 0) | (F.col("dist") == hop - 1))
+    return joined.groupBy(F.col("nbr").alias("node")).agg(
+        F.min(F.col("dist") + F.col("w")).alias("dist")
+    )
+
+
+def _with_singletons(labels: DataFrame, nodes: DataFrame | None, col: str) -> DataFrame:
+    """Add every id of ``nodes`` missing from ``labels`` as its own label."""
+    if nodes is None:
+        return labels
+    extra = (
+        nodes.select(F.col(nodes.columns[0]).alias("node"))
+        .distinct()
+        .join(labels.select("node"), "node", "left_anti")
+        .withColumn(col, F.col("node"))
+    )
+    return labels.unionByName(extra)
+
+
+def _at_fixpoint(run: fixpoint.Fixpoint, op: str, *pinned: DataFrame) -> DataFrame:
+    """The converged state of ``run``; at the round cap, free the run's
+    blocks and raise."""
+    if not run.converged:
+        fixpoint.release(None, run.frame, *pinned)
+        raise RuntimeError(f"{op}: no convergence in {run.rounds} rounds")
+    return run.frame
 
 
 def connected_components(
@@ -53,84 +127,50 @@ def connected_components(
     they come back as their own singleton component.  Raises if the graph
     has not converged after ``max_iters`` rounds (pointer jumping makes
     that ~2^25-diameter territory, i.e. never for real data).
+
+    Algorithm: hash-min label propagation + path-halving pointer jump.
+    ``label(v)`` starts as ``min(v, min(neighbors(v)))`` — the first
+    hash-min pass fused into initialization, which on near-dup graphs
+    (small clusters) converges most components immediately.  Each round
+    takes the min over the neighborhood, then jumps
+    ``label(v) <- label(label(v))``.  Labels only decrease, so
+    ``sum(label)`` is a strictly-decreasing convergence certificate, and
+    the jump gives union-find-style path halving: O(log(diameter)) rounds
+    instead of O(diameter) — a 1M-node chain converges in ~20 rounds.
+    Per round: one shuffle of the static edge list on ``nbr`` plus two of
+    the node-sized label table.
     """
-    # Materialize the input FIRST: the caller's edge frame is typically an
-    # expensive pipeline (e.g. an exact-Jaccard self-join), and fwd/rev
-    # below reference it twice — checkpointing up front evaluates it once
-    # and symmetrization runs over the materialized rows.
-    edges = edges.localCheckpoint(eager=True)
-    fwd = edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
-    rev = edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr"))
-    sym = fwd.unionByName(rev).where(F.col("node") != F.col("nbr")).distinct()
-    sym = sym.localCheckpoint(eager=True)
-
-    # Initialize with the FIRST hash-min pass fused in: label(v) =
-    # min(v, min(neighbors(v))).  One aggregation over the (already
-    # materialized) edge list replaces what would otherwise be the loop's
-    # first full round (join + union + aggregate + jump + two checkpoints)
-    # — on near-dup graphs, whose clusters are small, this converges most
-    # components immediately and the loop's job is just confirmation.
+    sym = fixpoint.pin(_symmetric(edges, src, dst))
     labels = sym.groupBy("node").agg(F.least(F.col("node"), F.min("nbr")).alias("label"))
-    if nodes is not None:
-        extra = (
-            nodes.select(F.col(nodes.columns[0]).alias("node"))
-            .distinct()
-            .join(labels.select("node"), "node", "left_anti")
-            .withColumn("label", F.col("node"))
-        )
-        labels = labels.unionByName(extra)
-    # Lazy checkpoint: the convergence aggregate below is the action that
-    # materializes it, so init costs ONE job, not checkpoint-job + sum-job.
-    labels = labels.localCheckpoint(eager=False)
 
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    for _ in range(max_iters):
-        # hash-min: candidate label for `node` from every neighbor's label
+    def step(labels: DataFrame, _: int) -> DataFrame:
         nbr_labels = sym.join(
-            labels.select(F.col("node").alias("nbr"), F.col("label")), "nbr"
+            labels.select(F.col("node").alias("nbr"), "label"), "nbr"
         ).select("node", "label")
-        merged = (
-            labels.select("node", "label")
-            .unionByName(nbr_labels)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
+        merged = labels.unionByName(nbr_labels).groupBy("node").agg(
+            F.min("label").alias("label")
         )
-        # Path halving, THROUGH THE PREVIOUS round's table: label <-
-        # prev_label(label).  Every label value is a node id present in the
-        # table (labels start as ids and only copy existing values), so the
-        # join is total; coalesce is belt.  Jumping via the stale table
-        # instead of `merged` itself is still a sound accelerator — labels
-        # only decrease, and any copy of an existing label preserves the
-        # invariant — and it buys the round's whole cost model: no
-        # mid-round checkpoint of `merged` (the old self-join also tripped
-        # Catalyst constraint inference on the union+aggregate subtree),
-        # and the round's single lazy checkpoint is materialized by the
-        # convergence aggregate.  One job per round, vs three.
-        #
+        # Path halving THROUGH THE PREVIOUS round's table: every label is
+        # a node id present in it (labels start as ids and only copy
+        # existing values), so the join is total; coalesce is belt.
+        # Jumping via the stale table instead of `merged` is still sound —
+        # labels only decrease and any copy of an existing label keeps the
+        # invariant — and it needs no mid-round cut of `merged`.
         # Convergence is unaffected: a round that leaves sum(label) fixed
-        # means hash-min changed nothing, so labels are edge-constant —
-        # every edge (u,v) has label(u) == label(v) — and since labels
-        # propagate only inside a component from init values ≤ the member
-        # ids, the constant is the component minimum: the true fixpoint.
-        jumped = (
-            merged.join(
-                labels.select(
-                    F.col("node").alias("label"), F.col("label").alias("ll")
-                ),
-                "label",
-                "left",
-            )
-            .select(
-                "node",
-                F.coalesce(F.least("label", "ll"), F.col("label")).alias("label"),
-            )
+        # means hash-min changed nothing, so every edge (u,v) has
+        # label(u) == label(v), and since labels propagate only inside a
+        # component from init values ≤ the member ids, the constant is the
+        # component minimum: the true fixpoint.
+        prev = labels.select(F.col("node").alias("label"), F.col("label").alias("ll"))
+        return merged.join(prev, "label", "left").select(
+            "node", F.coalesce(F.least("label", "ll"), F.col("label")).alias("label")
         )
-        labels = jumped.localCheckpoint(eager=False)
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
-            return labels.select("node", F.col("label").alias("component"))
-        prev_sum = cur_sum
-    raise RuntimeError(f"connected_components: no convergence in {max_iters} rounds")
+
+    run = fixpoint.iterate(
+        step, _with_singletons(labels, nodes, "label"), max_iters, [F.sum("label")]
+    )
+    comp = _at_fixpoint(run, "connected_components", sym)
+    return fixpoint.release(comp.select("node", F.col("label").alias("component")), sym)
 
 
 def incremental_components(
@@ -160,9 +200,9 @@ def incremental_components(
     members of touched components.  Re-running full CC per batch would
     re-shuffle the entire edge history every day instead.
     """
-    new_edges = new_edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).localCheckpoint(eager=True)
+    # The batch feeds the touched-component split, the singleton list and
+    # the relabel edges: pin it once rather than re-read it in each.
+    new_edges = fixpoint.pin(new_edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
     batch_nodes = (
         new_edges.select(F.col("src").alias("node"))
         .unionByName(new_edges.select(F.col("dst").alias("node")))
@@ -209,36 +249,28 @@ def k_core(
     cliques survive.  Curation treats core membership as a
     delete-aggressively signal where chains get keep-best handling.
 
-    Scale shape: each round is one degree aggregation plus two semi-joins
-    of the (static-schema) edge list against the survivor set — the
-    standard distributed peel.  Edge count is a strictly-decreasing
-    convergence certificate, checked as one scalar per round; lineage is
-    capped by per-round localCheckpoint exactly like connected_components.
-    Rounds ≈ peel depth, which is tiny for the flat graphs dedup emits
-    (the theoretical worst case is O(n) on a path, but a path has no
-    2-core at all — it peels in ⌈n/2⌉ rounds of mass deletion only when
-    k exceeds every degree, and the loop exits on the empty graph long
-    before max_iters).
+    Scale shape: the state is the surviving edge list; each round keeps
+    the edges whose BOTH endpoints have degree ≥ k — two degree windows
+    over one read of the state (on a symmetric list, the row count per
+    ``nbr`` is that node's degree).  Edge count is a strictly-decreasing
+    convergence certificate.  Rounds ≈ peel depth, which is tiny for the
+    flat graphs dedup emits (a path peels from both ends, one node per
+    end per round).
     """
-    fwd = edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
-    rev = edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr"))
-    sym = fwd.unionByName(rev).where(F.col("node") != F.col("nbr")).distinct()
-    sym = sym.localCheckpoint(eager=True)
-    n_edges = sym.count()
-    for _ in range(max_iters):
-        deg = sym.groupBy("node").agg(F.count(F.lit(1)).alias("core_degree"))
-        keep = deg.where(F.col("core_degree") >= k).select("node")
-        pruned = sym.join(keep, "node", "left_semi").join(
-            keep.withColumnRenamed("node", "nbr"), "nbr", "left_semi"
+
+    def step(e: DataFrame, _: int) -> DataFrame:
+        def degree(c: str):
+            return F.count(F.lit(1)).over(Window.partitionBy(c))
+
+        return (
+            e.select("node", "nbr", degree("node").alias("dn"), degree("nbr").alias("dm"))
+            .where((F.col("dn") >= k) & (F.col("dm") >= k))
+            .select("node", "nbr")
         )
-        pruned = pruned.localCheckpoint(eager=False)
-        n_new = pruned.count()
-        if n_new == n_edges:
-            return deg.where(F.col("core_degree") >= k)
-        sym, n_edges = pruned, n_new
-        if n_edges == 0:
-            return deg.where(F.lit(False))  # empty core, typed schema
-    raise RuntimeError(f"k_core: no convergence in {max_iters} rounds")
+
+    run = fixpoint.iterate(step, _symmetric(edges, src, dst), max_iters, [F.count(F.lit(1))])
+    core = _at_fixpoint(run, "k_core")
+    return core.groupBy("node").agg(F.count(F.lit(1)).alias("core_degree"))
 
 
 def dedup_cluster_assignments(
@@ -250,8 +282,6 @@ def dedup_cluster_assignments(
     a curation pipeline keeps ``doc_id == cluster_id`` rows and drops the
     rest.  Only documents that participate in at least one pair appear.
     """
-    from pyspark.sql import Window
-
     comp = connected_components(pair_df, src=id_a, dst=id_b)
     w = Window.partitionBy("component")
     return comp.select(
@@ -279,6 +309,7 @@ def pagerank(
     (documented so the oracle can reproduce it exactly).  Within a dedup
     pipeline this ranks documents by similarity-graph centrality — a
     centrality-based canonical pick, vs connected_components' min-id pick.
+    An empty edge list gives an empty frame.
 
     With ``personalization`` (a single-column frame of seed node ids,
     restricted internally to nodes present in the graph), the teleport
@@ -287,54 +318,44 @@ def pagerank(
     from a trusted seed set, the provenance-weighted centrality used for
     seed-anchored dedup picks and trust propagation.
 
-    Scale: the edge list and out-degrees are static — computed once,
-    localCheckpointed, and re-joined each round; only the node-sized rank
-    table updates.  Each round is one join shuffle on ``src`` plus one
-    aggregation shuffle on ``dst``; lineage is cut per round so the plan
-    stays flat across iterations (same discipline as
-    connected_components / ivf_train_centroids).  At 100 TB pre-partition
-    edges by ``src`` so the per-round join co-locates.
+    Scale: the deduplicated edge list, out-degrees, the node set and the
+    teleport vector are static subtrees that every round re-joins; each
+    runs once per plan (AQE reuses their exchanges across rounds), and
+    only the node-sized rank table updates.  Callers that hand in an
+    expensive edge pipeline pin it themselves.  Each round is one join
+    shuffle on ``src`` plus one aggregation shuffle on ``dst``.  At 100 TB
+    pre-partition edges by ``src`` so the per-round join co-locates.
     """
-    # Checkpoint discipline (the sssp_weighted lesson): the EDGE list is
-    # eagerly pinned — everything else derives from it and it re-enters
-    # every round — while nodes/outdeg/tele are LAZY checkpoints whose
-    # materialization rides an action that must run anyway (the node
-    # count, the first iteration).  The old shape paid one synchronous
-    # job per eager checkpoint (4 of them) before the first iteration
-    # even started.
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    e = e.where(F.col("src") != F.col("dst")).distinct().localCheckpoint(eager=True)
+    e = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .where(F.col("src") != F.col("dst"))
+        .distinct()
+    )
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    n = nodes.count()  # materializes the lazy checkpoint
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint(
-        eager=False
-    )
+    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     if personalization is None:
-        tele = nodes.withColumn("tele", F.lit(1.0 / n))
+        n = nodes.agg(F.count(F.lit(1)).alias("n"))
+        tele = nodes.crossJoin(F.broadcast(n)).select(
+            "node", (F.lit(1.0) / F.col("n")).alias("tele")
+        )
     else:
         seeds = (
-            personalization.select(
-                F.col(personalization.columns[0]).alias("node")
-            )
+            personalization.select(F.col(personalization.columns[0]).alias("node"))
             .distinct()
             .join(nodes, "node")  # teleport only to nodes in the graph
         )
         k = seeds.count()
         if k == 0:
             raise ValueError("personalization has no nodes in the graph")
-        tele = nodes.join(
-            seeds.withColumn("_s", F.lit(1.0)), "node", "left"
-        ).select(
+        tele = nodes.join(seeds.withColumn("_s", F.lit(1.0)), "node", "left").select(
             "node", (F.coalesce("_s", F.lit(0.0)) / k).alias("tele")
         )
-    tele = tele.localCheckpoint(eager=False)
-    ranks = tele.select("node", F.col("tele").alias("rank"))
-    for i in range(iterations):
+
+    def step(ranks: DataFrame, _: int) -> DataFrame:
         contribs = (
             e.join(ranks, e["src"] == ranks["node"])
             .join(outdeg, "src")
@@ -342,21 +363,16 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("c").alias("inflow"))
         )
-        ranks = tele.join(contribs, tele["node"] == contribs["dst"], "left").select(
+        return tele.join(contribs, tele["node"] == contribs["dst"], "left").select(
             "node",
             (
                 (1.0 - damping) * F.col("tele")
                 + damping * F.coalesce(F.col("inflow"), F.lit(0.0))
             ).alias("rank"),
         )
-        # Periodic (not per-round) lineage cut: e/outdeg/nodes are already
-        # checkpointed leaves, so the only thing that grows is the rank
-        # chain — a few joins per round.  Materializing every round costs a
-        # full job per iteration (~0.3 s each on local[32]); every 8th
-        # keeps the plan shallow at a fraction of that.
-        if (i + 1) % 8 == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
+
+    start = tele.select("node", F.col("tele").alias("rank"))
+    return fixpoint.iterate(step, start, iterations).frame
 
 
 def label_propagation(
@@ -367,51 +383,38 @@ def label_propagation(
 ) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) with a
     DETERMINISTIC update: each round every node adopts the most frequent
-    label among its neighbors, ties broken by the smallest label; isolated
-    rounds keep the current label.  Labels start as node ids, so after k
-    rounds a node's label is a function of its k-hop neighborhood only —
-    fixed ``iterations`` (no convergence probe) keeps the whole run a
-    pure, replayable function of the edge set.
+    label among its neighbors, ties broken by the smallest label.  Labels
+    start as node ids, so after k rounds a node's label is a function of
+    its k-hop neighborhood only — fixed ``iterations`` (no convergence
+    probe) keeps the whole run a pure, replayable function of the edge
+    set.  Neighbors are those of the symmetrized simple graph: repeated
+    edges count once and self-loops are ignored.
 
     Communities differ from connected components on bridge topologies:
     LPA splits weakly-joined dense clusters that CC necessarily merges.
 
     Scale: per round, one groupBy over (node, neighbor-label) pairs and a
-    per-node arg-max window — both keyed by node ids only; the undirected
-    doubling is a projection, not a shuffle.  Hub skew: the (node, label)
-    pre-aggregation combines map-side, so a hub's updates arrive as
-    partial counts, never raw neighbor rows.
+    per-node arg-max window — both keyed by node ids only.  Hub skew: the
+    (node, label) pre-aggregation combines map-side, so a hub's updates
+    arrive as partial counts, never raw neighbor rows.
     """
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
+    sym = fixpoint.pin(_symmetric(edges, src, dst))
+    w = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("label"))
 
-    # und re-enters every round's join: persist so the (possibly
-    # expensive) edge lineage computes once — intra-job cache reuse;
-    # callers/bench release via clearCache.
-    und = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionAll(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .persist()
-    )
-    labels = (
-        und.select(F.col("u").alias("node"))
-        .dropDuplicates()
-        .select("node", F.col("node").alias("label"))
-    )
-    for _ in range(iterations):
-        nbr = und.join(
-            labels.select(F.col("node").alias("v"), "label"), "v"
-        ).select(F.col("u").alias("node"), "label")
-        counts = nbr.groupBy("node", "label").agg(
-            F.count(F.lit(1)).alias("c")
+    def step(labels: DataFrame, _: int) -> DataFrame:
+        counts = (
+            sym.join(labels.select(F.col("node").alias("nbr"), "label"), "nbr")
+            .groupBy("node", "label")
+            .agg(F.count(F.lit(1)).alias("c"))
         )
-        w = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("label"))
-        labels = (
+        return (
             counts.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .select("node", "label")
         )
-    return labels
+
+    start = sym.select("node").distinct().select("node", F.col("node").alias("label"))
+    return fixpoint.release(fixpoint.iterate(step, start, iterations).frame, sym)
 
 
 def bfs_hops(
@@ -425,60 +428,20 @@ def bfs_hops(
     node's minimum hop distance to ANY seed over the undirected edge set,
     exploring at most ``max_hops`` levels (unreached nodes are absent).
 
-    Classic frontier expansion — the per-round work is ONE join of the
-    static symmetrized edge list against the CURRENT frontier (not the
-    whole visited set), an anti-join to drop already-visited nodes, and a
-    count that doubles as the round's materializing action.  Frontiers
-    shrink as the reachable set saturates, so total cost is
-    O(edges × rounds-touched), the standard Pregel BFS cost model; as in
-    :func:`connected_components`, ``localCheckpoint`` caps lineage so
-    round N's plan does not nest rounds 1..N-1.
+    Frontier expansion as unit-weight relaxation (:func:`_relax` with
+    ``hop``): per round, one join of the static symmetrized edge list
+    against the distance frame in which only frontier nodes expand along
+    real edges, plus one min-aggregate — total O(edges × rounds-touched),
+    the standard Pregel BFS cost model.
 
     Seeds outside the edge set still return ``hops = 0`` (distance to
     themselves), matching the declarative min-over-paths semantics a
     recursive-CTE oracle computes.
     """
-    edges = edges.localCheckpoint(eager=True)
-    fwd = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    rev = edges.select(F.col(dst).alias("s"), F.col(src).alias("d"))
-    sym = fwd.unionByName(rev).where(F.col("s") != F.col("d")).distinct()
-    sym = sym.localCheckpoint(eager=True)
-
-    visited = (
-        seeds.select(F.col(seeds.columns[0]).cast("bigint").alias("node"))
-        .distinct()
-        .withColumn("hops", F.lit(0).cast("int"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = visited.select("node")
-    for hop in range(1, max_hops + 1):
-        nxt = _bfs_round(sym, frontier, visited, hop).localCheckpoint(
-            eager=False
-        )
-        # The count materializes the lazy checkpoint AND is the
-        # termination probe — one job per round.
-        if nxt.count() == 0:
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=False)
-        frontier = nxt.select("node")
-    return visited
-
-
-def _bfs_round(
-    sym: DataFrame, frontier: DataFrame, visited: DataFrame, hop: int
-) -> DataFrame:
-    """One BFS expansion round — the unit the SCALING.md claim and its
-    plan gate (TestRound14Plans) hold to: the static edge list joins
-    against the FRONTIER (never the visited set, whose size only grows),
-    then one anti-join drops already-visited nodes.  Split out of
-    bfs_hops so the round's plan shape is machine-checkable."""
-    return (
-        sym.join(frontier.withColumnRenamed("node", "s"), "s")
-        .select(F.col("d").alias("node"))
-        .distinct()
-        .join(visited.select("node"), "node", "left_anti")
-        .withColumn("hops", F.lit(hop).cast("int"))
-    )
+    sym = fixpoint.pin(_symmetric(edges, src, dst, seeds=seeds))
+    run = fixpoint.iterate(lambda d, hop: _relax(sym, d, hop), _sources(seeds), max_hops)
+    hops = run.frame.select("node", F.col("dist").cast("int").alias("hops"))
+    return fixpoint.release(hops, sym)
 
 
 def connected_components_star(
@@ -508,34 +471,17 @@ def connected_components_star(
     direct root edges after the first alternation — the edge list only
     shrinks toward the final star forest, so later rounds get CHEAPER
     on exactly the graphs that hurt hash-min.  Convergence in
-    O(log n) alternations with high probability (paper Thm 3).
+    O(log n) alternations with high probability (paper Thm 3); the
+    certificate is (count, Σlo, Σhi) of the edge list, and ``stats``
+    receives the rounds run, the confirming round included.
 
     Same contract as ``connected_components``: (node, component) with
     component = min reachable id; singletons via ``nodes``.  Equivalence
     against hash-min and a recursive-CTE closure is pinned on planted-hub
     fixtures in tests/test_operators.py::TestStarComponents, including a
     round-count bound."""
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("lo"),
-            F.greatest(F.col(src), F.col(dst)).alias("hi"),
-        )
-        .where(F.col("lo") != F.col("hi"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    all_nodes = nodes
 
-    def _cert(frame: DataFrame) -> tuple:
-        row = frame.agg(
-            F.count(F.lit(1)), F.sum("lo"), F.sum("hi")
-        ).collect()[0]
-        return tuple(row)
-
-    prev = _cert(e)
-    rounds = 0
-    for _ in range(max_iters):
-        rounds += 1
+    def step(e: DataFrame, _: int) -> DataFrame:
         # ---- large-star: symmetric adjacency, attach big neighbors to min
         adj = e.select(F.col("lo").alias("u"), F.col("hi").alias("v")).unionByName(
             e.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
@@ -552,29 +498,22 @@ def connected_components_star(
         # ---- small-star: high->low orientation, attach low side + self
         adj2 = e1.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
         m2 = adj2.groupBy("u").agg(F.min("v").alias("m"))
-        sm = (
+        return (
             adj2.join(m2, "u")
             .select(F.col("m").alias("lo"), F.col("v").alias("hi"))
-            .unionByName(
-                m2.select(F.col("m").alias("lo"), F.col("u").alias("hi"))
-            )
+            .unionByName(m2.select(F.col("m").alias("lo"), F.col("u").alias("hi")))
             .where(F.col("lo") != F.col("hi"))
-            .select(
-                F.least("lo", "hi").alias("lo"), F.greatest("lo", "hi").alias("hi")
-            )
+            .select(F.least("lo", "hi").alias("lo"), F.greatest("lo", "hi").alias("hi"))
             .distinct()
         )
-        e = sm.localCheckpoint(eager=False)
-        cur = _cert(e)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"connected_components_star: no convergence in {max_iters} rounds"
-        )
+
+    e = _symmetric(edges, src, dst).where(F.col("node") < F.col("nbr"))
+    e = e.select(F.col("node").alias("lo"), F.col("nbr").alias("hi"))
+    cert = [F.count(F.lit(1)), F.sum("lo"), F.sum("hi")]
+    run = fixpoint.iterate(step, e, max_iters, cert)
+    e = _at_fixpoint(run, "connected_components_star")
     if stats is not None:
-        stats["rounds"] = rounds
+        stats["rounds"] = run.rounds
 
     # Star forest -> labels: every hi points at its root lo; roots and
     # isolated nodes label themselves.
@@ -585,16 +524,7 @@ def connected_components_star(
         .join(member.select("node"), "node", "left_anti")
         .withColumn("component", F.col("node"))
     )
-    labels = member.unionByName(roots)
-    if all_nodes is not None:
-        extra = (
-            all_nodes.select(F.col(all_nodes.columns[0]).alias("node"))
-            .distinct()
-            .join(labels.select("node"), "node", "left_anti")
-            .withColumn("component", F.col("node"))
-        )
-        labels = labels.unionByName(extra)
-    return labels
+    return _with_singletons(member.unionByName(roots), nodes, "component")
 
 
 def sssp_weighted(
@@ -614,58 +544,17 @@ def sssp_weighted(
     what lets a recursive-CTE oracle replay the fixpoint.
 
     Each round is ONE join of the static symmetrized edge list against
-    the current distance frame + a min-aggregate — the Pregel SSSP cost
-    model, O(edges) per round with map-side-combining mins.
+    the current distance frame + a min-aggregate (:func:`_relax`) — the
+    Pregel SSSP cost model, O(edges) per round with map-side-combining
+    mins.  Zero-weight self-loops fold the old "keep the previous
+    distance" union into that join, so a round reads the previous
+    distances once and the rounds need no lineage cut.
 
-    Checkpoint discipline (measured at sf0.1, quiet-window A/B): the
-    symmetrized edge list is EAGERLY localCheckpoint'ed — it re-enters
-    every round, and pinning it as one up-front job truncates the
-    (large) edge-build subtree out of every later plan; each ROUND's
-    frame is LAZILY localCheckpoint'ed — dist_r is referenced TWICE by
-    round r+1 (the relax branch and the union branch), so without a
-    lineage cut the logical tree doubles per round, but eager per-round
-    cuts cost one blocking job per round (pure overhead: 6.7-7.6 s vs
-    ~4.2 s for the lazy form; a plain persist() is worst of all, 10-26 s
-    — the exponential analyzed tree survives and every action pays
-    cache-manager canonicalization over it).
-
-    The edge list is NOT pre-deduplicated: the per-round min-fold
-    absorbs multi-edges (a duplicate (s,d,w) row can never change a
-    minimum), so a groupBy(s,d).min(w) before the loop would be one
-    full shuffle of the edge list bought back only when callers pass
-    heavy multi-edge inputs — the near-dup-graph callers pass unique
-    pairs.  The hop cap is the distributed-world contract (bounded
-    rounds, like the fixed-round PageRank/LPA); diameter-unbounded
-    graphs iterate until a round changes nothing.
+    Duplicate (s,d,w) rows are dropped with the symmetrization; parallel
+    edges of different weights stay, and the per-round min absorbs them.
+    The hop cap is the distributed-world contract (bounded rounds, like
+    the fixed-round PageRank/LPA).
     """
-    fwd = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("d"), F.col(weight).alias("w")
-    )
-    rev = edges.select(
-        F.col(dst).alias("s"), F.col(src).alias("d"), F.col(weight).alias("w")
-    )
-    sym = (
-        fwd.unionByName(rev)
-        .where(F.col("s") != F.col("d"))
-        .localCheckpoint(eager=True)
-    )
-    dist = (
-        seeds.select(F.col(seeds.columns[0]).cast("bigint").alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("bigint"))
-    )
-    for _ in range(rounds):
-        relaxed = (
-            sym.join(dist.withColumnRenamed("node", "s"), "s")
-            .select(
-                F.col("d").alias("node"),
-                (F.col("dist") + F.col("w")).alias("dist"),
-            )
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-    return dist
+    sym = fixpoint.pin(_symmetric(edges, src, dst, weight, seeds))
+    run = fixpoint.iterate(lambda d, _: _relax(sym, d), _sources(seeds), rounds)
+    return fixpoint.release(run.frame, sym)

@@ -879,6 +879,120 @@ class TestConnectedComponents:
         }
 
 
+def _chain(spark, n=40):
+    return spark.createDataFrame([(i, i + 1, 1) for i in range(n)], "src long, dst long, w long")
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _checkpoints_read(df) -> int:
+    """Persisted RDDs under ``df``'s plan — the blocks it may keep."""
+    persisted = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return len(
+        {
+            leaves.apply(i).rdd().id()
+            for i in range(leaves.size())
+            if leaves.apply(i).nodeName() == "LogicalRDD"
+            and persisted.containsKey(leaves.apply(i).rdd().id())
+        }
+    )
+
+
+class TestGraphFixpointContract:
+    """Round caps, empty inputs, checkpoint release and job budgets of the
+    operators that run through operators/fixpoint.py."""
+
+    @pytest.mark.parametrize(
+        "op", ["connected_components", "k_core", "connected_components_star"]
+    )
+    def test_round_cap_raises_naming_operator(self, spark, op):
+        from aws_genaric_datapipeline_spark.operators import graph as G
+
+        before = _persisted(spark)
+        with pytest.raises(RuntimeError, match=f"^{op}: no convergence in 1 rounds"):
+            getattr(G, op)(_chain(spark).select("src", "dst"), max_iters=1)
+        assert _persisted(spark) <= before, "a failed run must free its blocks"
+
+    @pytest.mark.parametrize(
+        "op",
+        [
+            "connected_components",
+            "incremental_components",
+            "k_core",
+            "pagerank",
+            "label_propagation",
+            "bfs_hops",
+            "connected_components_star",
+            "sssp_weighted",
+        ],
+    )
+    def test_empty_edge_list(self, spark, op):
+        """Every operator returns an empty frame on an empty edge list;
+        BFS and SSSP return exactly their seeds at distance 0."""
+        from aws_genaric_datapipeline_spark.operators import graph as G
+
+        empty = spark.createDataFrame([], "src long, dst long, w long")
+        seeds = spark.createDataFrame([(7,), (9,)], "node long")
+        fn = getattr(G, op)
+        if op in ("bfs_hops", "sssp_weighted"):
+            assert sorted(map(tuple, fn(empty, seeds).collect())) == [(7, 0), (9, 0)]
+        elif op == "incremental_components":
+            state = spark.createDataFrame([], "node long, component long")
+            assert fn(state, empty).collect() == []
+        else:
+            assert fn(empty.select("src", "dst")).collect() == []
+
+    @pytest.mark.parametrize("op", ["connected_components", "sssp_weighted"])
+    def test_leaves_only_the_blocks_its_result_reads(self, spark, op):
+        """ROADMAP aim 3: a query leaves nothing persisted behind beyond
+        what the returned frame reads — the run's intermediate cuts and
+        unread edge pins are freed."""
+        from aws_genaric_datapipeline_spark.operators import graph as G
+
+        chain = _chain(spark)
+        before = _persisted(spark)
+        if op == "sssp_weighted":
+            out = G.sssp_weighted(chain, spark.createDataFrame([(0,)], "node long"))
+        else:
+            out = G.connected_components(chain.select("src", "dst"))
+        out.collect()
+        assert _checkpoints_read(out) == 1
+        assert _persisted(spark) - before <= _checkpoints_read(out)
+
+    # Jobs (build + action) on the 30-edge graph below, at the shared test
+    # session's settings.  Job counts are deterministic, so this is a hard
+    # budget: a change that adds a cut or a probe job fails here.
+    JOB_BUDGET = {"connected_components": 40, "sssp_weighted": 13}
+
+    @pytest.mark.parametrize("op", sorted(JOB_BUDGET))
+    def test_job_budget(self, spark, op):
+        from aws_genaric_datapipeline_spark.operators import graph as G
+
+        edges = spark.createDataFrame(
+            [(i, i + 1, i % 3 + 1) for i in range(20)]
+            + [(a, b, 2) for a in range(100, 105) for b in range(a + 1, 105)],
+            "src long, dst long, w long",
+        )
+        seeds = spark.createDataFrame([(0,), (100,)], "node long")
+        sc = spark.sparkContext
+        group = f"job-budget-{op}"
+        sc.setJobGroup(group, op)
+        try:
+            if op == "sssp_weighted":
+                out = G.sssp_weighted(edges, seeds, rounds=4)
+            else:
+                out = G.connected_components(edges.select("src", "dst"))
+            out.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs <= self.JOB_BUDGET[op], f"{op}: {jobs} jobs"
+
+
 class TestCuration:
     def test_incremental_dedup_drops_seen_and_batch_dups(self, spark):
         """Survivors = fingerprints unseen in the corpus, min-id within the
@@ -1887,6 +2001,15 @@ class TestPageRank:
         assert sum(rows.values()) == pytest.approx(1.0, abs=1e-9)
         leaf_vals = {round(rows[i], 12) for i in range(1, 6)}
         assert len(leaf_vals) == 1, "symmetric leaves must tie exactly"
+
+    def test_empty_edge_list_gives_empty_typed_frame(self, spark):
+        """Regression: the uniform start 1/N divided by N = 0 in Python."""
+        from aws_genaric_datapipeline_spark.operators.graph import pagerank
+
+        edges = spark.createDataFrame([], "src long, dst long")
+        out = pagerank(edges)
+        assert out.dtypes == [("node", "bigint"), ("rank", "double")]
+        assert out.collect() == []
 
 
 class TestCdcApply:
@@ -2982,6 +3105,14 @@ class TestPersonalizedPagerank:
         with _pytest.raises(ValueError, match="no nodes in the graph"):
             pagerank(edges, personalization=seeds)
 
+    def test_empty_graph_still_raises(self, spark):
+        from aws_genaric_datapipeline_spark.operators.graph import pagerank
+
+        empty = spark.createDataFrame([], "src long, dst long")
+        seeds = spark.createDataFrame([(1,)], "node long")
+        with pytest.raises(ValueError, match="no nodes in the graph"):
+            pagerank(empty, personalization=seeds)
+
     def test_uniform_teleport_unchanged(self, spark):
         """personalization=None keeps the original uniform formula: ranks
         sum to ~1 minus dropped dangling mass and are symmetric on a
@@ -3682,6 +3813,14 @@ class TestSsspWeighted:
             for r in sssp_weighted(df, seeds, rounds=3).collect()
         }
         assert got == {1: 0, 4: 0, 3: 1, 2: 10}
+
+    def test_seed_outside_edge_set_keeps_dist_zero(self, spark):
+        from aws_genaric_datapipeline_spark.operators.graph import sssp_weighted
+
+        df = spark.createDataFrame([(1, 2, 3)], "src bigint, dst bigint, w bigint")
+        seeds = spark.createDataFrame([(1,), (99,)], "node bigint")
+        got = {r["node"]: r["dist"] for r in sssp_weighted(df, seeds).collect()}
+        assert got == {1: 0, 2: 3, 99: 0}
 
 
 class TestEditDistanceJoin:

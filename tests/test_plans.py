@@ -1430,34 +1430,41 @@ class TestRound14Plans:
 
     def test_bfs_expands_frontier_not_visited(self, spark):
         """SCALING.md row 'Multi-source BFS': 'per round: one join of the
-        static edge list against the FRONTIER (not the visited set)'.
-        Behavior gate: a star graph around node 0 with a fat VISITED set
-        and a one-node frontier {99} — expanding from the visited set
-        would resurrect node 0's hub neighbors; the frontier round must
-        emit exactly node 99's unseen neighbor.  Plan gate: the round is
-        one equi join on the frontier key plus one LeftAnti, no
-        cartesian."""
+        static edge list against the distance frame, in which only the
+        FRONTIER expands along real edges'.  Behavior gate: a star around
+        hub 0 whose distance frame holds the hub at hop 0 and every spoke
+        at hop 1 EXCEPT spoke 50, with 99 -> 100 hanging off spoke 99.
+        Round 2 expands the hop-1 frontier only: 100 arrives at hop 2 and
+        50 stays absent — expanding from the whole visited set would
+        re-expand hub 0 and resurrect 50 at hop 1.  Plan gate: the round
+        is exactly one equi join, with no anti-join and no cartesian."""
+        import re
+
         from aws_genaric_datapipeline_spark.operators.graph import (
-            _bfs_round,
+            _relax,
+            _symmetric,
         )
         from aws_genaric_datapipeline_spark.plans.audit import explain_str
 
-        hub_edges = [(0, d) for d in range(1, 99)] + [(0, 99), (99, 100)]
-        sym = spark.createDataFrame(
-            hub_edges + [(d, s) for s, d in hub_edges], "s long, d long"
-        )
+        hub_edges = [(0, d) for d in range(1, 100)] + [(99, 100)]
+        edges = spark.createDataFrame(hub_edges, "src long, dst long")
+        seeds = spark.createDataFrame([(0,)], "node long")
+        sym = _symmetric(edges, "src", "dst", seeds=seeds)
+        spokes = {n: 1 for n in range(1, 100) if n != 50}
         visited = spark.createDataFrame(
-            [(n, 1) for n in range(100)], "node long, hops int"
+            [(0, 0)] + list(spokes.items()), "node long, dist long"
         )
-        frontier = spark.createDataFrame([(99,)], "node long")
-        out = _bfs_round(sym, frontier, visited, hop=2)
-        assert [(r["node"], r["hops"]) for r in out.collect()] == [(100, 2)]
+        out = _relax(sym, visited, hop=2)
+        got = {r["node"]: r["dist"] for r in out.collect()}
+        assert got == {0: 0, **spokes, 100: 2}
         plan = explain_str(out, mode="simple")
-        assert "CartesianProduct" not in plan
-        # exactly one anti-join per round (assert on the FINAL AQE plan;
-        # the dump repeats the tree under '== Initial Plan ==')
+        # assert on the FINAL AQE plan; the dump repeats the tree under
+        # '== Initial Plan =='
         final = plan.split("Initial Plan")[0]
-        assert final.count("LeftAnti") == 1, final[:2000]
+        assert "CartesianProduct" not in final
+        assert "LeftAnti" not in final, final[:2000]
+        joins = re.findall(r"BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin", final)
+        assert len(joins) == 1, final[:2000]
 
     def test_record_linkage_pairs_shuffle_on_block_key_only(self, spark):
         """SCALING.md row 'Record linkage': 'candidate pairs ONLY within
