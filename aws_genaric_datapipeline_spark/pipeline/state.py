@@ -6,9 +6,16 @@ Design (FIXTURES.md §A2, fixing reference bugs by construction):
   ``RAW COMPLETED`` even on the prepared path (prepared_layer_job.py:176-208
   — SURVEY.md §0 bug 1), so batches were reprocessed forever.  Here a state
   *transition* is an appended row; the current state of a batch is the
-  row with the latest ``updated_at`` (window latest-wins read).  Appends are
-  atomic at file granularity (parquet committer), so a crashed job leaves at
-  worst a batch stuck in its previous state — re-running is always safe.
+  row with the latest ``updated_at`` (window latest-wins read).
+- An append is the analogue of the reference's driver-side DynamoDB
+  ``put_item``: one row, serialized on the driver with pyarrow and written
+  through Spark's own Hadoop ``FileSystem`` for the log path (``file://``,
+  ``s3a://``, ``hdfs://`` alike) — no Spark job, no Python worker.  It is
+  atomic at file granularity: the bytes go to a hidden ``.``-prefixed name,
+  which Spark's batch and streaming file listings skip, then are renamed to
+  the final ``part-…parquet`` name.  A crash leaves at worst an invisible
+  stray file and a batch stuck in its previous state — re-running is always
+  safe.
 - Typed columns (counts are longs, times are timestamps) — the reference
   stored everything as strings (raw_layer_job.py:194-205).
 - The log is tiny (one row per batch transition), so latest-wins windowing
@@ -18,10 +25,14 @@ Design (FIXTURES.md §A2, fixing reference bugs by construction):
 from __future__ import annotations
 
 import datetime as dt
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 class States:
@@ -49,12 +60,29 @@ STATE_SCHEMA = T.StructType(
 )
 
 
+# timestamp[us, tz=UTC] and the not-null flags, derived from STATE_SCHEMA
+_ARROW_SCHEMA = to_arrow_schema(STATE_SCHEMA)
+
+
+# A log row file as Spark's file listing sees it: not ``_SUCCESS``, not a
+# ``.crc`` and not a hidden in-flight append.
+_DATA_FILES = "[^_.]*.parquet"
+
+
 class StateStore:
     """State log at a directory path; append rows, read latest-per-batch."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+
+    def _fs(self):
+        """Spark's Hadoop ``FileSystem`` for the log path, the path, and the
+        JVM ``Path`` class."""
+        hpath = self.spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+        root = hpath(self.path)
+        conf = self.spark._jsparkSession.sessionState().newHadoopConf()
+        return root.getFileSystem(conf), root, hpath
 
     # ------------------------------------------------------------------ write
     def append(
@@ -68,30 +96,38 @@ class StateStore:
         prepared_count: int | None = None,
         job_name: str | None = None,
     ) -> None:
-        """Append one transition row.  ``seq`` disambiguates same-microsecond
-        appends (monotone from the previous max)."""
-        now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+        """Append one transition row as one parquet file, from the driver.
+
+        ``seq`` is the number of data files already in the log plus one:
+        every append writes one single-row file, so this is the previous
+        max ``seq`` plus one.  It only breaks ``updated_at`` ties;
+        concurrent appenders may share a value."""
+        fs, root, hpath = self._fs()
+        seq = 1 + len(fs.globStatus(hpath(root, _DATA_FILES)))
+        row = {
+            "batch_id": batch_id,
+            "job_src": job_src,
+            "state": state,
+            "raw_path": raw_path,
+            "raw_count": raw_count,
+            "prepared_path": prepared_path,
+            "prepared_count": prepared_count,
+            "job_name": job_name,
+            "updated_at": dt.datetime.now(dt.timezone.utc),
+            "seq": seq,
+        }
+        sink = pa.BufferOutputStream()
+        pq.write_table(pa.Table.from_pylist([row], schema=_ARROW_SCHEMA), sink)
+
+        name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+        hidden, final = hpath(root, f".{name}.tmp"), hpath(root, name)
+        out = fs.create(hidden, False)
         try:
-            prev_max = self._read_log().agg(F.max("seq")).collect()[0][0] or 0
-        except Exception:
-            prev_max = 0
-        row = [
-            (
-                batch_id,
-                job_src,
-                state,
-                raw_path,
-                raw_count,
-                prepared_path,
-                prepared_count,
-                job_name,
-                now,
-                prev_max + 1,
-            )
-        ]
-        self.spark.createDataFrame(row, STATE_SCHEMA).coalesce(1).write.mode("append").parquet(
-            self.path
-        )
+            out.write(sink.getvalue().to_pybytes())
+        finally:
+            out.close()
+        if not fs.rename(hidden, final):
+            raise OSError(f"state log: could not rename {hidden} to {final}")
 
     # ------------------------------------------------------------------- read
     def _read_log(self) -> DataFrame:
@@ -100,9 +136,8 @@ class StateStore:
         # caller's control flow exception-free and the logs clean — Spark
         # logs the full PATH_NOT_FOUND stack at WARN before the exception
         # even reaches Python.
-        import os
-
-        if "://" not in self.path and not os.path.exists(self.path):
+        fs, root, _ = self._fs()
+        if not fs.exists(root):
             return self.spark.createDataFrame([], STATE_SCHEMA)
         return self.spark.read.schema(STATE_SCHEMA).parquet(self.path)
 
@@ -154,10 +189,3 @@ class StateStore:
             .collect()
         )
         return [r.asDict() for r in rows]
-
-    def exists(self) -> bool:
-        try:
-            self._read_log().limit(1).collect()
-            return True
-        except Exception:
-            return False

@@ -6,7 +6,11 @@ bugs (SURVEY.md §0 bugs 1-2)."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
+import os
+import time
+import uuid
 
 import pyspark.sql.functions as F
 import pytest
@@ -22,6 +26,7 @@ from aws_genaric_datapipeline_spark.config import (
 )
 from aws_genaric_datapipeline_spark.pipeline import Pipeline, States, StateStore
 from aws_genaric_datapipeline_spark.pipeline.jobs import build_pipeline, make_batch_id
+from aws_genaric_datapipeline_spark.pipeline.state import STATE_SCHEMA
 from aws_genaric_datapipeline_spark.sources.readers import SchemaMismatchError, validate_schema
 
 
@@ -165,6 +170,96 @@ class TestStateStore:
         s.append("b1", "src", States.RAW_COMPLETED)
         s.append("b1", "src", States.FAILED)
         assert s.pending("src") == []
+
+    def test_updated_at_is_utc_on_a_non_utc_driver(self, spark, tmp_path):
+        """Regression: a driver whose local zone is not UTC stored
+        ``updated_at`` shifted by its UTC offset (PySpark reads a naive
+        datetime as local time), so a later PREPARED_COMPLETED row sorted
+        before the RAW_COMPLETED row and the batch went pending again."""
+        s = StateStore(spark, str(tmp_path / "st"))
+        s.append("b1", "src", States.RAW_COMPLETED)
+        saved = os.environ.get("TZ")
+        os.environ["TZ"] = "Asia/Kolkata"
+        time.tzset()
+        try:
+            s.append("b1", "src", States.PREPARED_COMPLETED)
+        finally:
+            if saved is None:
+                os.environ.pop("TZ")
+            else:
+                os.environ["TZ"] = saved
+            time.tzset()
+        [st] = s.current().select("state", F.unix_micros("updated_at").alias("us")).collect()
+        assert st["state"] == States.PREPARED_COMPLETED
+        assert abs(st["us"] / 1e6 - time.time()) < 60
+        assert s.pending("src") == []
+
+    # Jobs are counted through a statusTracker job group, on the tests'
+    # shared session.  Counts are deterministic, so these are hard budgets.
+    @staticmethod
+    def _jobs(spark, fn) -> int:
+        sc = spark.sparkContext
+        group = f"state-jobs-{uuid.uuid4()}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_append_runs_no_spark_job(self, spark, tmp_path):
+        s = StateStore(spark, str(tmp_path / "st"))
+
+        def two_appends():
+            s.append("b1", "src", States.RAW_COMPLETED, raw_count=1)  # creates the log
+            s.append("b1", "src", States.PREPARED_COMPLETED, prepared_count=1)
+
+        assert self._jobs(spark, two_appends) == 0
+        assert [r["seq"] for r in s.log().orderBy("seq").collect()] == [1, 2]
+
+    # All of these are ingest's and promote's own reads and writes; the two
+    # appends add none (they cost 3 jobs each when append was a Spark
+    # write: 9 in all).
+    BATCH_JOB_BUDGET = 3
+
+    def test_ingest_and_promote_job_budget(self, spark, cfg, source_df):
+        p = Pipeline(spark, cfg)
+        jobs = self._jobs(spark, lambda: p.promote_batch(p.ingest(source_df)))
+        assert jobs <= self.BATCH_JOB_BUDGET, f"{jobs} jobs"
+
+    @staticmethod
+    def _old_format_log(spark, path: str, job_src: str) -> None:
+        """Two rows written the way append() used to write them (one Spark
+        write per row, with its ``_SUCCESS`` and ``.crc`` files), plus a
+        stray hidden file from an append that crashed before its rename."""
+        for seq, state in ((1, States.RAW_COMPLETED), (2, States.PREPARED_COMPLETED)):
+            at = dt.datetime(2026, 1, 1, 0, 0, seq, tzinfo=dt.timezone.utc)
+            row = [("b0", job_src, state, None, None, None, None, None, at, seq)]
+            spark.createDataFrame(row, STATE_SCHEMA).coalesce(1).write.mode("append").parquet(path)
+        with open(os.path.join(path, ".part-00000-crashed-c000.snappy.parquet.tmp"), "wb") as fh:
+            fh.write(b"PAR1 truncated")  # unreadable if Spark ever listed it
+
+    def test_append_continues_an_old_format_log(self, spark, tmp_path):
+        path = str(tmp_path / "st")
+        self._old_format_log(spark, path, "src")
+        assert "_SUCCESS" in os.listdir(path)
+        s = StateStore(spark, path)
+        s.append("b1", "src", States.RAW_COMPLETED)
+        seqs = {r["batch_id"]: r["seq"] for r in s.current().collect()}
+        assert seqs == {"b0": 2, "b1": 3}
+        assert s.log().count() == 3
+        assert [d["batch_id"] for d in s.pending("src")] == ["b1"]
+
+    def test_streaming_promoter_skips_in_flight_appends(self, spark, cfg, source_df, tmp_path):
+        from aws_genaric_datapipeline_spark.streaming.promote import run_streaming_promoter
+
+        self._old_format_log(spark, cfg.state_path, cfg.job_src)
+        p = Pipeline(spark, cfg)
+        batch = p.ingest(source_df)
+        assert run_streaming_promoter(p, str(tmp_path / "ckpt")) == [batch]
+        cur = {r["batch_id"]: r["state"] for r in p.state.current().collect()}
+        assert cur == {"b0": States.PREPARED_COMPLETED, batch: States.PREPARED_COMPLETED}
 
 
 class TestConfig:
