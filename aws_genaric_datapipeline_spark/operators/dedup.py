@@ -32,11 +32,6 @@ _JACCARD_LIVE: list = []
 
 
 # ---------------------------------------------------------------- exact dedup
-def dedup_exact(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
-    """Exact dedup on full rows or a column subset (hash-based groupBy)."""
-    return df.dropDuplicates(subset)
-
-
 def dedup_by_fingerprint(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -582,24 +577,6 @@ def jaccard_pairs(
 _MH_P = (1 << 31) - 1
 _MH_A = [(0x9E3779B9 * (2 * i + 1)) % (_MH_P - 1) + 1 for i in range(64)]
 _MH_B = [(0xBF58476D * (i + 1)) % _MH_P for i in range(64)]
-
-
-def minhash_signature(shingles: Column, num_hashes: int) -> Column:
-    """MinHash signature (array<bigint>) from an array of shingles.
-
-    Permutation i is simulated with seeded xxhash64 — JVM-side, vectorized,
-    and mergeable (min is associative).  Empty shingle sets get MAX_LONG
-    sentinels so they never collide into real buckets.
-    """
-    return F.array(
-        *[
-            F.coalesce(
-                F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, F.lit(i)))),
-                F.lit(2**63 - 1),
-            )
-            for i in range(num_hashes)
-        ]
-    )
 
 
 def _collapse_by_shingle_set(

@@ -63,11 +63,6 @@ def html_text_lines(html: Column) -> Column:
     return F.filter(lines, lambda line: line != "")
 
 
-def extract_visible_text(html: Column) -> Column:
-    """Extracted text as one newline-joined string (no boilerplate pass)."""
-    return F.array_join(html_text_lines(html), "\n")
-
-
 def drop_boilerplate_lines(
     df: DataFrame,
     id_col: str = "doc_id",

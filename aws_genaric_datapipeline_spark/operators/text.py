@@ -763,19 +763,6 @@ def fingerprint(text: Column) -> Column:
     return F.md5(normalize_text(text))
 
 
-def profile_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the standard text-analysis columns to a document DataFrame."""
-    t = F.col(text_col)
-    return df.select(
-        "*",
-        token_count(t).alias("n_tokens"),
-        bpe_ish_token_count(t).alias("n_tokens_bpe"),
-        detect_language(t).alias("lang_pred"),
-        quality_score(t).alias("quality"),
-        fingerprint(t).alias("fp"),
-    )
-
-
 def winnow_batch_fn(k: int = 25, w: int = 10, slab_chars: int = 4 << 20):
     """The plain (sessionless) batch kernel behind winnow_fingerprints_udf:
     ``pd.Series[str|None] -> pd.Series[list[int]]``.  Split out so

@@ -10,10 +10,24 @@ Delta-Lake-shaped, deliberately small:
   holding one JSON commit per version (``00000000000000000001.json``).
 - A commit lists ACTIONS: files added, files removed, the operation
   name, and an optional ``app_txn_id`` for idempotent re-commit.
-- The LIVE snapshot at version V = replay of adds minus removes up to V.
-  Readers pin a version => SNAPSHOT ISOLATION (a concurrent overwrite
-  cannot change what a pinned reader sees; data files are immutable and
-  never edited in place).
+- ONE fold reads the log: ``TxnTable.snapshot(v)`` replays the commits
+  up to V once into an immutable ``Snapshot`` — live files, deletion
+  vectors, per-file stats and add versions, the field-id schema chain,
+  constraints, bloom specs and partition-transform specs.  Every read,
+  prune, merge and maintenance operation plans from it.  Readers pin a
+  version => SNAPSHOT ISOLATION (a concurrent overwrite cannot change
+  what a pinned reader sees; data files are immutable and never edited
+  in place).
+- A checkpoint IS a serialized Snapshot: ``expire_snapshots`` rewrites
+  the cutoff commit as ``snapshot(cutoff)`` with ``base: true``, and the
+  fold resets to whatever a base commit carries — so a checkpoint holds
+  exactly what the fold reads.
+- The log is the only schema source: every commit records each file's
+  write schema (``__schema__`` in its stats), and reads scan with the
+  schema resolved from those records — no parquet footer is opened to
+  plan a read.  Additive columns union; numeric type drift across
+  appends widens (``sources.readers._widen``); anything else raises
+  ``SchemaMismatchError`` before a job runs.
 - Commit publication is ``os.open(..., O_CREAT | O_EXCL)`` of the next
   version file: exactly one of two racing writers wins the version; the
   loser re-reads the log and either RETRIES (disjoint files) or raises
@@ -23,7 +37,7 @@ Delta-Lake-shaped, deliberately small:
   names.  ``vacuum()`` deletes them.
 
 Scale notes: the log is one tiny JSON per commit and the snapshot
-computation is a driver-side fold over file names — same cost class as
+computation is one driver-side fold over file names — same cost class as
 Delta's log replay.  Data-file IO is all DataFrame parquet; at 100 TB
 the data path is unchanged parquet scan/write, and the only global
 coordination is the single version-file create, which object stores
@@ -43,10 +57,16 @@ import os
 import shutil
 import time
 import uuid
+from dataclasses import dataclass
 from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+from aws_genaric_datapipeline_spark.sources.readers import (
+    SchemaMismatchError,
+    _widen,
+)
 
 
 class TxnConflict(RuntimeError):
@@ -213,6 +233,316 @@ def _file_bloom(path: Path, spec: dict[str, dict]) -> dict[str, dict]:
     return out
 
 
+def _col(name: str):
+    """Column reference by exact name (dots and backticks are literal)."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+def _widen_json(column: str, a: str | None, b: str) -> str:
+    """The wider of two recorded Spark type JSONs (``a`` None = no type
+    yet) under the numeric widening rule of ``sources.readers._widen``;
+    any other disagreement raises SchemaMismatchError naming the column
+    and both types."""
+    if a is None or a == b:
+        return b
+    ta, tb = (
+        f.dataType.simpleString() for f in _struct_from_rec([["a", a], ["b", b]])
+    )
+    w = _widen(ta, tb)
+    if w is None:
+        raise SchemaMismatchError(
+            f"column {column!r}: incompatible types across commits: {ta} "
+            f"vs {tb}; only additive columns and numeric widenings are "
+            f"reconcilable"
+        )
+    return a if w == ta else b if w == tb else json.dumps(w)
+
+
+def _physical_name(fid: int, write_version: int, schemas) -> str | None:
+    """Physical column name field ``fid`` had in files written at
+    ``write_version``: its name in the latest schema snapshot at or
+    before the write, else (field registered only at a later schema
+    commit — every pre-bootstrap column, and any column appended
+    mid-era) its name in the earliest LATER snapshot's PRE-change
+    field list.  The pre list is sound because a column's name cannot
+    change between the write and its first registration — renames
+    only happen via schema commits, and each one registers all
+    then-current columns in its pre list before mutating."""
+    latest: str | None = None
+    for s in schemas:
+        if s["version"] <= write_version:
+            names = {f["id"]: f["name"] for f in s["fields"]}
+            # .get, NOT keep-if-present: a field id absent from a
+            # snapshot at/before the write was DROPPED before the
+            # write, so it has no physical name in this era — a
+            # stale mapping would claim (and hide) a fresh column
+            # that re-uses the dropped name in a later append
+            latest = names.get(fid)
+        else:
+            if latest is not None:
+                break
+            pre = {f["id"]: f["name"] for f in s["pre_fields"]}
+            if fid in pre:
+                return pre[fid]
+    return latest
+
+
+@dataclass(frozen=True)
+class Snapshot:
+    """One version of a TxnTable, folded from its commit log in a single
+    pass (``TxnTable.snapshot``).  Every read, prune, merge and
+    maintenance operation plans from one of these, and
+    ``expire_snapshots`` writes one back as its checkpoint commit.
+
+    ``files`` are the live files (sorted); ``dvs`` maps a data file to
+    its deletion-vector file; ``stats`` and ``add_versions`` (the
+    version whose commit FIRST added a file — its write era) cover the
+    live files; ``schemas`` is the field-id chain [{version, fields,
+    pre_fields}], empty while the table has never renamed or dropped a
+    column; ``constraint_set_at`` stamps each live constraint with the
+    version its predicate was set; ``blooms`` maps a column to its
+    {m, k[, field_id, declared_at]} declaration; ``transform`` is the
+    partition-transform spec in force and ``transform_history`` every
+    spec ever declared, deduplicated by hidden column name."""
+
+    version: int
+    files: tuple[str, ...]
+    dvs: dict[str, str]
+    stats: dict[str, dict]
+    add_versions: dict[str, int]
+    schemas: tuple[dict, ...]
+    constraints: dict[str, str]
+    constraint_set_at: dict[str, int]
+    blooms: dict[str, dict]
+    transform: dict | None
+    transform_history: tuple[dict, ...]
+
+    @property
+    def fields(self) -> list[dict]:
+        """Registered fields at this version ([] = never evolved)."""
+        return self.schemas[-1]["fields"] if self.schemas else []
+
+    def write_schema(self, file: str) -> list:
+        """The [[name, spark_type_json], ...] schema ``file`` was written
+        with — the commit log is the only schema source."""
+        rec = self.stats.get(file, {}).get("__schema__")
+        if rec is None:
+            raise ValueError(
+                f"data file {file} has no __schema__ record in the commit "
+                f"log at version {self.version}"
+            )
+        return rec
+
+    def scan_plan(self, files, schemas=None) -> tuple[list, dict[str, str]]:
+        """THE per-era projection, computed from the commit log alone and
+        shared by every read and by schema commits (so a schema commit
+        registers exactly the columns a read surfaces).
+
+        ``files`` group by their write era's physical-name mapping — the
+        key is ((field_id, physical_name_or_None), ...) over every field
+        id ever registered; a never-evolved table is one group.  Each
+        group scans with the union of its files' recorded write schemas
+        (new columns append in first-appearance order over the
+        path-sorted files), and its physical columns map to the logical
+        names of the LAST snapshot in ``schemas`` (default: this
+        snapshot's own chain): registered names in registry order, then
+        unregistered additive columns under their own name.  Hidden
+        partition-transform columns (``__p_*``) are layout metadata and
+        never surface.  A group whose files
+        disagree on a column's type scans once per recorded schema, and
+        each logical column takes the widened type of all its scans
+        (``_widen_json``), so a mismatch raises before any job runs.
+
+        Returns ([(scan_files, {physical: type_json}, [(physical,
+        logical), ...]), ...], {logical: type_json}) — the second dict
+        in output column order."""
+        schemas = self.schemas if schemas is None else schemas
+        universe = sorted(
+            {f["id"] for s in schemas for f in (s["fields"] + s["pre_fields"])}
+        )
+        current = schemas[-1]["fields"] if schemas else []
+        cur_names = {f["name"] for f in current}
+        groups: dict[tuple, list[str]] = {}
+        for f in sorted(files):
+            wv = self.add_versions.get(f, 0)
+            key = tuple((i, _physical_name(i, wv, schemas)) for i in universe)
+            groups.setdefault(key, []).append(f)
+        scans: list[tuple] = []
+        types: dict[str, str] = {}
+        for key, fs in groups.items():
+            mapping = dict(key)
+            recs = {f: dict(self.write_schema(f)) for f in fs}
+            union: dict[str, str] = {}
+            for rec in recs.values():
+                for c, tj in rec.items():
+                    union.setdefault(c, tj)
+            claimed = set(mapping.values())
+            proj = [
+                (mapping[f["id"]], f["name"])
+                for f in current
+                if mapping.get(f["id"]) in union
+            ]
+            proj += [
+                (c, c)
+                for c in union
+                if c not in claimed
+                and c not in cur_names
+                and not c.startswith("__p_")
+            ]
+            clash = any(
+                rec.get(c, tj) != tj
+                for rec in recs.values()
+                for c, tj in union.items()
+            )
+            by_schema: dict[str, list[str]] = {}
+            for f, rec in recs.items():
+                by_schema.setdefault(json.dumps(rec) if clash else "", []).append(f)
+            for sfs in by_schema.values():
+                sch = recs[sfs[0]] if clash else union
+                part = [(p, lg) for p, lg in proj if p in sch]
+                for p, lg in part:
+                    types[lg] = _widen_json(lg, types.get(lg), sch[p])
+                scans.append((sfs, sch, part))
+        return scans, types
+
+    def stat(
+        self, file: str, column: str, section: str | None = None,
+        strict: bool = False,
+    ):
+        """``file``'s committed stat for LOGICAL ``column`` — [min, max],
+        or its entry under ``section`` ("__nulls__", "__bloom__") — or
+        None when unknown.  Stats are keyed by the PHYSICAL name the
+        column had in the file's write era, resolved through its field
+        id (the Iceberg stats-by-field-id shape).  A column the current
+        schema does not register keeps its own name by default: a stale
+        same-name stat is sound for range PRUNING, since the old
+        column's values surface as NULL and NULL never passes a range.
+        ``strict`` (null counts, min/max aggregation) refuses that
+        fallback on an evolved table, so the caller reads the file
+        instead of trusting a dropped column's stat."""
+        pname = column
+        if self.schemas:
+            fid = next(
+                (f["id"] for f in self.fields if f["name"] == column), None
+            )
+            if fid is not None:
+                pname = _physical_name(
+                    fid, self.add_versions.get(file, 0), self.schemas
+                )
+            elif strict:
+                return None
+        st = self.stats.get(file, {})
+        if section is not None:
+            st = st.get(section) or {}
+        return st.get(pname) if pname else None
+
+    def prune(self, preds: list[tuple]) -> list[str]:
+        """Live files whose committed [min, max] can intersect EVERY
+        ``(column, lower, upper)`` predicate; a file without a stat for
+        a column is kept — pruning is an optimization, never a
+        correctness gate."""
+
+        def _may(f: str, column: str, lower, upper) -> bool:
+            s = self.stat(f, column)
+            if s is None:
+                return True
+            mn, mx = s
+            return not (
+                (lower is not None and mx < _stat_bound(mx, lower))
+                or (upper is not None and mn > _stat_bound(mn, upper))
+            )
+
+        return [f for f in self.files if all(_may(f, *p) for p in preds)]
+
+    def prune_values(self, column: str, values) -> list[str]:
+        """Live files whose [min, max] for ``column`` — and, where the
+        column has a declared bloom, whose committed bitset — can
+        contain ANY of ``values``; files with neither are kept."""
+        vals = list(values)
+        out = []
+        for f in self.files:
+            s, bl = self.stat(f, column), self.stat(f, column, "__bloom__")
+            bits = set(bl["bits"]) if bl is not None else None
+            if (s is None and bl is None) or any(
+                (s is None or s[0] <= _stat_bound(s[0], w) <= s[1])
+                and (bits is None or _bloom_maybe(bits, bl["m"], bl["k"], w))
+                for w in vals
+            ):
+                out.append(f)
+        return out
+
+    def prune_nullness(self, column: str, is_null: bool) -> list[str]:
+        """Live files that can hold a row matching ``column IS NULL``
+        (``is_null``) or ``IS NOT NULL``: skips provably empty files,
+        zero-null files for IS NULL and all-null files for IS NOT NULL.
+        Null counts resolve STRICTLY (see ``stat``): for IS NULL a stale
+        nulls=0 would wrongly skip a file whose rows all surface as
+        NULL."""
+        out = []
+        for f in self.files:
+            rows = self.stats.get(f, {}).get("__rows__")
+            if rows == 0:
+                continue
+            nc = self.stat(f, column, "__nulls__", strict=True)
+            if nc is None or (nc > 0 if is_null else rows is None or nc < rows):
+                out.append(f)
+        return out
+
+    def bloom_targets(self) -> dict[str, dict]:
+        """Declared bloom columns resolved to the physical names the NEXT
+        write (era ``version + 1``) carries.  Field-id declarations
+        survive renames; a name-only declaration (made before any schema
+        history existed) names the column as of its declaration
+        version."""
+        if not self.schemas:
+            return self.blooms
+        out: dict[str, dict] = {}
+        for c, mk in self.blooms.items():
+            fid = mk.get("field_id")
+            if fid is None:
+                at = mk.get("declared_at", 0)
+                fid = next(
+                    (
+                        f["id"]
+                        for f in self.fields
+                        if _physical_name(f["id"], at, self.schemas) == c
+                    ),
+                    None,
+                )
+            pname = (
+                _physical_name(fid, self.version + 1, self.schemas)
+                if fid is not None
+                else None
+            )
+            if pname is not None:
+                out[pname] = mk
+        return out
+
+    def checkpoint(self, app_txn_id: str | None, committed_at: float) -> dict:
+        """This snapshot as a self-contained checkpoint commit: ``base``
+        makes the fold reset to exactly what it carries, so replaying a
+        log that starts here rebuilds this snapshot."""
+        return {
+            "version": self.version,
+            "op": "checkpoint",
+            "base": True,
+            "adds": list(self.files),
+            "removes": [],
+            "app_txn_id": app_txn_id,
+            "committed_at": committed_at,
+            "stats": self.stats,
+            "add_versions": self.add_versions,
+            "schema_history": list(self.schemas),
+            "dv_updates": self.dvs,
+            "dv_files": sorted(set(self.dvs.values())),
+            "constraints": self.constraints,
+            "constraint_set_at": self.constraint_set_at,
+            "bloom_filters": self.blooms,
+            "partition_transform": self.transform,
+            "partition_transform_history": list(self.transform_history),
+        }
+
+
 class TxnTable:
     """ACID parquet table at ``path`` with a JSON commit log."""
 
@@ -258,65 +588,113 @@ class TxnTable:
         ]
         return max(versions, default=0)
 
-    def live_files(
-        self, version: int | None = None, commits: list[dict] | None = None
-    ) -> list[str]:
-        """File names live at ``version`` (default: latest).  ``commits``
-        lets callers reuse an already-parsed log."""
+    def snapshot(self, version: int | None = None) -> Snapshot:
+        """THE commit-log fold: one pass over the commits at or below
+        ``version`` (default: latest) builds the ``Snapshot`` every other
+        view reads.  A checkpoint (``base``) commit is AUTHORITATIVE: the
+        fold resets to what it carries.  That makes expire_snapshots
+        crash-safe — a log caught between the checkpoint swap and the
+        unlink of the older commits still replays to exactly the
+        checkpoint's state, never to resurrected pre-cutoff files.  An
+        expired version raises instead of reading back empty."""
         v = self.latest_version() if version is None else version
-        commits = self._commits() if commits is None else commits
-        if commits and commits[0].get("base") and v < commits[0]["version"]:
-            # expire_snapshots collapsed history below this point; an
-            # expired version must FAIL loudly, not read back empty.
-            raise ValueError(
-                f"version {v} has been expired (earliest retained: "
-                f"{commits[0]['version']})"
-            )
         live: set[str] = set()
-        for c in commits:
-            if c["version"] > v:
-                break
-            if c.get("base"):
-                # A checkpoint commit is AUTHORITATIVE: its adds are the
-                # complete live set at that version.  Resetting here makes
-                # expire_snapshots crash-safe — if a crash (or a concurrent
-                # reader) catches the log between the checkpoint swap and
-                # the unlink of the old commit files, replaying commits
-                # 1..cutoff-1 *and* the checkpoint still yields exactly the
-                # checkpoint's file set, never resurrected pre-cutoff files.
-                live = set()
-            live -= set(c["removes"])
-            live |= set(c["adds"])
-        return sorted(live)
-
-    def dv_map(
-        self, version: int | None = None, commits: list[dict] | None = None
-    ) -> dict[str, str]:
-        """data-file name -> deletion-vector file name live at ``version``
-        (default latest) — the merge-on-read state.  Folds the same commit
-        replay as live_files: a checkpoint commit resets the mapping to
-        what it carries, a commit that REMOVES a data file drops its DV
-        entry (the rewrite already applied it), and ``dv_updates`` install
-        or replace per-file vectors.  Empty dict = no DVs anywhere, and
-        every read path stays on the untouched fast path."""
-        v = self.latest_version() if version is None else version
-        commits = self._commits() if commits is None else commits
         dvs: dict[str, str] = {}
-        for c in commits:
-            if c["version"] > v:
+        stats: dict[str, dict] = {}
+        addv: dict[str, int] = {}
+        schemas: dict[int, dict] = {}
+        cons: dict[str, str] = {}
+        set_at: dict[str, int] = {}
+        blooms: dict[str, dict] = {}
+        ptf: dict | None = None
+        hist: list[dict] = []
+        for i, c in enumerate(self.commits_iter(newest_first=False)):
+            n = c["version"]
+            if i == 0 and c.get("base") and v < n:
+                raise ValueError(
+                    f"version {v} has been expired (earliest retained: {n})"
+                )
+            if n > v:
                 break
             if c.get("base"):
-                dvs = {}
+                live, dvs = set(), {}
+                cons = dict(c.get("constraints") or {})
+                carried = c.get("constraint_set_at") or {}
+                set_at = {k: carried.get(k, n) for k in cons}
+                blooms = dict(c.get("bloom_filters") or {})
+                ptf = c.get("partition_transform")
+                # a checkpoint without a history degrades to its one spec
+                hist = list(
+                    c.get("partition_transform_history") or ([ptf] if ptf else [])
+                )
+            elif c.get("partition_transform"):
+                ptf = c["partition_transform"]
+                hist.append(ptf)
+            live = (live - set(c["removes"])) | set(c["adds"])
+            # a removed data file's vector goes with it (the rewrite
+            # applied it); dv_updates install or replace vectors, and a
+            # None value is restore_version's explicit clear marker
             for f in c["removes"]:
                 dvs.pop(f, None)
             for f, d in (c.get("dv_updates") or {}).items():
                 if d is None:
-                    # explicit clear marker (restore_version un-doing a
-                    # vector added after the restore point)
                     dvs.pop(f, None)
                 else:
                     dvs[f] = d
-        return dvs
+            # checkpoints carry the original add versions forward; a
+            # commit's own adds only backstop files with no recorded origin
+            for f, av in (c.get("add_versions") or {}).items():
+                addv.setdefault(f, int(av))
+            for f in c["adds"]:
+                addv.setdefault(f, n)
+            stats.update(c.get("stats") or {})
+            for h in c.get("schema_history") or []:
+                schemas.setdefault(h["version"], h)
+            if c.get("schema"):
+                schemas[n] = {
+                    "version": n,
+                    "fields": c["schema"]["fields"],
+                    "pre_fields": c["schema"].get(
+                        "pre_fields", c["schema"]["fields"]
+                    ),
+                }
+            ck = c.get("constraint")
+            if ck and ck.get("sql") is None:
+                cons.pop(ck["name"], None)
+                set_at.pop(ck["name"], None)
+            elif ck:
+                cons[ck["name"]] = ck["sql"]
+                set_at[ck["name"]] = n
+            bf = c.get("bloom_filter")
+            if bf:
+                blooms[bf["col"]] = {k: x for k, x in bf.items() if k != "col"}
+        files = tuple(sorted(live))
+        uniq: dict[str, dict] = {}
+        for spec in hist:
+            uniq.setdefault(_hidden_name(spec), spec)
+        return Snapshot(
+            version=v,
+            files=files,
+            dvs=dvs,
+            stats={f: stats[f] for f in files if f in stats},
+            add_versions={f: addv[f] for f in files},
+            schemas=tuple(schemas[k] for k in sorted(schemas)),
+            constraints=cons,
+            constraint_set_at=set_at,
+            blooms=blooms,
+            transform=ptf,
+            transform_history=tuple(uniq.values()),
+        )
+
+    def live_files(self, version: int | None = None) -> list[str]:
+        """File names live at ``version`` (default: latest)."""
+        return list(self.snapshot(version).files)
+
+    def dv_map(self, version: int | None = None) -> dict[str, str]:
+        """data-file name -> deletion-vector file name live at ``version``
+        (default latest) — the merge-on-read state.  Empty dict = no DVs
+        anywhere, and every read path stays on the untouched fast path."""
+        return self.snapshot(version).dvs
 
     def _dv_rows(self, dv_files: list[str]) -> DataFrame:
         """(file, pos) rows of the given deletion-vector parquet files."""
@@ -338,226 +716,29 @@ class TxnTable:
         ]
 
     # ------------------------------------------------- schema evolution
-    def _schema_commits(
-        self, upto: int | None = None, commits: list[dict] | None = None
-    ) -> list[dict]:
-        """Schema snapshots [{version, fields}] ascending, where fields is
-        [{"id": int, "name": str}, ...] — one entry per rename/drop commit
-        plus any history carried forward by an expire_snapshots
-        checkpoint.  Empty list = never evolved (identity mapping).
-        ``commits`` lets callers reuse an already-parsed log."""
-        snaps: dict[int, dict] = {}
-        for c in self._commits() if commits is None else commits:
-            for h in c.get("schema_history") or []:
-                snaps.setdefault(h["version"], h)
-            if c.get("schema"):
-                snaps[c["version"]] = {
-                    "version": c["version"],
-                    "fields": c["schema"]["fields"],
-                    "pre_fields": c["schema"].get(
-                        "pre_fields", c["schema"]["fields"]
-                    ),
-                }
-        out = [snaps[v] for v in sorted(snaps)]
-        if upto is not None:
-            out = [s for s in out if s["version"] <= upto]
-        return out
-
-    def _file_add_versions(
-        self, commits: list[dict] | None = None
-    ) -> dict[str, int]:
-        """File name -> version whose commit FIRST added it (the write
-        era deciding which physical column names the file carries).
-        Checkpoint commits carry the original versions forward in
-        ``add_versions``; their own re-adds only backstop files with no
-        recorded origin."""
-        out: dict[str, int] = {}
-        for c in self._commits() if commits is None else commits:
-            for f, v in (c.get("add_versions") or {}).items():
-                out.setdefault(f, int(v))
-            for f in c["adds"]:
-                out.setdefault(f, c["version"])
-        return out
-
-    def _file_write_schemas(
-        self, commits: list[dict]
-    ) -> dict[str, list]:
-        """File name -> the [[name, spark_type_json], ...] schema recorded
-        by the commit that wrote it (``__schema__`` in the per-file stats;
-        carried through expire_snapshots with the rest of the stats fold).
-        Files from commits that predate schema recording are absent —
-        readers fall back to footer-based resolution for those."""
-        out: dict[str, list] = {}
-        for c in self._commits() if commits is None else commits:
-            for n, s in (c.get("stats") or {}).items():
-                rec = s.get("__schema__")
-                if rec is not None:
-                    out.setdefault(n, rec)
-        return out
-
-    def _era_groups(
-        self,
-        files: list[str],
-        schemas: list[dict],
-        commits: list[dict],
-    ) -> dict[tuple, list[str]]:
-        """Group ``files`` by their write era's physical-name mapping —
-        the key is ((field_id, physical_name_or_None), ...) over the full
-        field-id universe.  The single source of the era-resolution rule
-        shared by _read_resolved and _snapshot_column_names (they MUST
-        agree, or schema commits would register different columns than
-        reads surface)."""
-        universe = sorted(
-            {
-                f["id"]
-                for s in schemas
-                for f in (s["fields"] + s["pre_fields"])
-            }
-        )
-        addv = self._file_add_versions(commits)
-        groups: dict[tuple, list[str]] = {}
-        for f in files:
-            wv = addv.get(f, 0)
-            key = tuple(
-                (fid, self._physical_name(fid, wv, schemas))
-                for fid in universe
-            )
-            groups.setdefault(key, []).append(f)
-        return groups
-
-    @staticmethod
-    def _physical_name(
-        fid: int, write_version: int, schemas: list[dict]
-    ) -> str | None:
-        """Physical column name field ``fid`` had in files written at
-        ``write_version``: its name in the latest schema snapshot at or
-        before the write, else (field registered only at a later schema
-        commit — every pre-bootstrap column, and any column appended
-        mid-era) its name in the earliest LATER snapshot's PRE-change
-        field list.  The pre list is sound because a column's name cannot
-        change between the write and its first registration — renames
-        only happen via schema commits, and each one registers all
-        then-current columns in its pre list before mutating."""
-        latest: str | None = None
-        for s in schemas:
-            if s["version"] <= write_version:
-                names = {f["id"]: f["name"] for f in s["fields"]}
-                # .get, NOT keep-if-present: a field id absent from a
-                # snapshot at/before the write was DROPPED before the
-                # write, so it has no physical name in this era — a
-                # stale mapping would claim (and hide) a fresh column
-                # that re-uses the dropped name in a later append
-                latest = names.get(fid)
-            else:
-                if latest is not None:
-                    break
-                pre = {f["id"]: f["name"] for f in s["pre_fields"]}
-                if fid in pre:
-                    return pre[fid]
-        return latest
-
     def _current_fields(self) -> list[dict]:
         """Registered fields at the latest version, refreshed with ids
         for any columns present in the current snapshot but not yet
         registered (bootstraps identity ids on the first schema change;
-        later, folds additively-evolved columns into the registry)."""
-        commits = self._commits()
-        schemas = self._schema_commits(commits=commits)
-        fields = (
-            [dict(f) for f in schemas[-1]["fields"]] if schemas else []
-        )
+        later, folds additively-evolved columns into the registry).  The
+        snapshot's columns come from the log alone
+        (``Snapshot.scan_plan``)."""
+        snap = self.snapshot()
+        fields = [dict(f) for f in snap.fields]
         max_id = max(
             (
                 f["id"]
-                for s in schemas
+                for s in snap.schemas
                 for f in (s["fields"] + s["pre_fields"])
             ),
             default=0,
         )
-        if schemas:
-            # evolved table: snapshot column names come from the commit-
-            # recorded write schemas (log-only, zero I/O; footer fallback
-            # for pre-recording files), mapped through the same era
-            # resolution _read_resolved uses — planning a full evolved
-            # read just to ask .columns cost a mergeSchema footer job per
-            # era group on every schema commit
-            snapshot_cols = self._snapshot_column_names(commits, schemas)
-        else:
-            try:
-                snapshot_cols = self.read().columns
-            except ValueError:  # empty table
-                snapshot_cols = []
         known = {f["name"] for f in fields}
-        for c in snapshot_cols:
+        for c in snap.scan_plan(snap.files)[1]:
             if c not in known:
                 max_id += 1
                 fields.append({"id": max_id, "name": c})
         return fields
-
-    def _snapshot_column_names(
-        self, commits: list[dict], schemas: list[dict]
-    ) -> list[str]:
-        """Logical column names of the latest snapshot, computed from the
-        commit-recorded write schemas (zero I/O; pyarrow footer fallback
-        only for files predating schema recording) with the SAME era
-        resolution (``_era_groups``) and ordering as ``read().columns``:
-        per era group, current registered names whose era-physical name
-        the group's files carry (registry order), then unregistered
-        additive columns in first-appearance order over the path-sorted
-        group; groups union in discovery order.  Membership is identical
-        to the old read().columns behavior; additive-column ORDER is
-        equivalent up to the discovery order of the scan (path-sorted
-        here, matching mergeSchema's fold and live_files' sort)."""
-        try:
-            files = self.live_files(commits=commits)
-        except ValueError:
-            return []
-        if not files:
-            return []
-        current = schemas[-1]["fields"]
-        cur_names = {f["name"] for f in current}
-        fsch = self._file_write_schemas(commits)
-
-        def _file_cols(f: str) -> list[str]:
-            rec = fsch.get(f)
-            if rec is not None:
-                return [cname for cname, _ in rec]
-            import pyarrow.parquet as pq
-
-            return pq.ParquetFile(
-                self.path / self.DATA_DIR / f
-            ).schema_arrow.names
-
-        out: list[str] = []
-        seen: set[str] = set()
-        for key, fs in self._era_groups(files, schemas, commits).items():
-            mapping = dict(key)
-            cols: list[str] = []
-            have: set[str] = set()
-            for f in sorted(fs):
-                for c in _file_cols(f):
-                    if c not in have:
-                        have.add(c)
-                        cols.append(c)
-            claimed = {pn for pn in mapping.values() if pn}
-            part = [
-                f2["name"]
-                for f2 in current
-                if mapping.get(f2["id"]) and mapping[f2["id"]] in have
-            ]
-            part += [
-                c
-                for c in cols
-                if c not in claimed
-                and c not in cur_names
-                and c not in ("__file", "__pos")
-                and not c.startswith("__p_")
-            ]
-            for c in part:
-                if c not in seen:
-                    seen.add(c)
-                    out.append(c)
-        return out
 
     def _commit_schema(
         self, op: str, mutate, max_retries: int = 10
@@ -623,9 +804,11 @@ class TxnTable:
     ) -> DataFrame:
         """Snapshot read (time travel with ``version``).
 
-        ``mergeSchema`` gives ADDITIVE schema evolution for free: a
-        commit may add columns, and older files surface them as null —
-        the Delta/Iceberg add-column semantics.  Time travel to a
+        ADDITIVE schema evolution: a commit may add columns, and older
+        files surface them as null — the Delta/Iceberg add-column
+        semantics, resolved from each file's recorded write schema.  A
+        numeric column whose type drifted across appends (int then
+        bigint) reads as the widened type.  Time travel to a
         pre-evolution version reads only pre-evolution files and so
         shows the old schema.
 
@@ -633,33 +816,21 @@ class TxnTable:
         drop_column): live files group by the physical-name mapping of
         their write era, each group's physical columns alias to the
         logical names of the schema in force at the target version, and
-        the groups union by name (missing columns null-fill).  A table
-        that never evolved takes the single mergeSchema read — zero
-        overhead.  ``schema_version`` reads ``version``'s DATA under a
-        different version's NAMES (table_changes uses it to diff across
-        a rename boundary).
-
-        The commit log is parsed ONCE per read and shared by the three
-        log-derived views (live set, schema chain, add versions) — a
-        CDF consumer replaying k versions over an n-commit log pays
-        O(k·n) parses, not O(3·k·n)."""
-        commits = self._commits()
-        files = self.live_files(version, commits=commits)
-        if not files:
+        the groups union by name (missing columns null-fill) — see
+        ``Snapshot.scan_plan``.  ``schema_version`` reads ``version``'s
+        DATA under a different version's NAMES (table_changes uses it to
+        diff across a rename boundary)."""
+        snap = self.snapshot(version)
+        if not snap.files:
             raise ValueError(
-                f"table {self.path} has no data at version "
-                f"{self.latest_version() if version is None else version}"
+                f"table {self.path} has no data at version {snap.version}"
             )
-        target = (
-            schema_version
-            if schema_version is not None
-            else (version if version is not None else self.latest_version())
+        names = (
+            None
+            if schema_version is None
+            else self.snapshot(schema_version).schemas
         )
-        schemas = self._schema_commits(target, commits=commits)
-        v = version if version is not None else self.latest_version()
-        return self._read_resolved(
-            files, schemas, commits, dvs=self.dv_map(v, commits)
-        )
+        return self._read_resolved(snap, snap.files, names)
 
     @staticmethod
     def _apply_dvs(
@@ -689,156 +860,68 @@ class TxnTable:
 
     def _read_resolved(
         self,
-        files: list[str],
-        schemas: list[dict],
-        commits: list[dict],
-        dvs: dict[str, str] | None = None,
+        snap: Snapshot,
+        files,
+        schemas=None,
         with_positions: bool = False,
     ) -> DataFrame:
-        """Era-grouped read of ``files`` under the LAST snapshot in
-        ``schemas`` (the field-id resolution engine behind read(),
-        read_pruned() and the pruned merge); identity mergeSchema read
-        when the table never evolved.  ``dvs`` (data file -> DV file) is
-        the merge-on-read state to apply: rows whose (file, row_index)
-        appear in a deletion vector are filtered out of the scan.
-        ``with_positions`` keeps the per-row ``__file``/``__pos`` identity
-        columns (the DV writer's input)."""
-        dvs = {f: d for f, d in (dvs or {}).items() if f in set(files)}
-
-        def _hide(df: DataFrame) -> DataFrame:
-            # hidden partition-transform columns (__p_*) are physical
-            # layout metadata, never part of the logical schema — every
-            # read path strips them (Iceberg's hidden partitioning)
-            hidden = [c for c in df.columns if c.startswith("__p_")]
-            return df.drop(*hidden) if hidden else df
-
-        def _finish(raw: DataFrame) -> DataFrame:
-            if not dvs and not with_positions:
-                return _hide(raw)
-            dv_rows = self._dv_rows(list(dvs.values())) if dvs else None
-            return _hide(self._apply_dvs(raw, dv_rows, with_positions))
-
-        fsch = self._file_write_schemas(commits)
-
-        def _union_schema(fs: list[str]):
-            """Merged Spark schema of ``fs`` from the commit-recorded
-            write schemas — the same fold mergeSchema computes (new
-            fields append in first-appearance order over the path-sorted
-            file list), but from the log, with ZERO footer reads.  None
-            (-> footer fallback) if any file predates schema recording or
-            two files disagree on a column's type (mergeSchema would
-            widen; rare, and correctness beats the saved job)."""
-            names: list[str] = []
-            types: dict[str, str] = {}
-            for f in sorted(fs):
-                rec = fsch.get(f)
-                if rec is None:
-                    return None
-                for cname, tj in rec:
-                    prev = types.get(cname)
-                    if prev is None:
-                        types[cname] = tj
-                        names.append(cname)
-                    elif prev != tj:
-                        return None
-            return _struct_from_rec([[c, types[c]] for c in names])
-
-        def _scan(fs: list[str]) -> DataFrame:
-            # Schema from commit metadata when every file's write schema
-            # was recorded: no mergeSchema footer-merge JOB for multi-file
-            # groups and no driver-side footer read for single files —
-            # at 100 TB file counts, scan planning cost becomes O(log),
-            # not O(live files) (the Iceberg schema-in-metadata shape).
-            # Fallback (pre-recording files, type disagreement): the old
-            # behavior — mergeSchema for multi-file groups, single-file
-            # footer otherwise.
-            reader = self.spark.read
-            sch = _union_schema(fs)
-            if sch is not None:
-                reader = reader.schema(sch)
-            elif len(fs) > 1:
-                reader = reader.option("mergeSchema", "true")
-            return reader.parquet(
-                *[str(self.path / self.DATA_DIR / f) for f in fs]
+        """Era-resolved read of ``files`` (live files of ``snap``) under
+        ``Snapshot.scan_plan``'s projection, with ``snap``'s deletion
+        vectors applied: rows whose (file, row_index) appear in a vector
+        are filtered out of the scan.  Every scan takes its schema from the
+        log, so planning opens no parquet footer and runs no
+        schema-merge job.  ``with_positions`` keeps the per-row
+        ``__file``/``__pos`` identity columns (the DV writer's input).
+        An empty ``files`` gives a schema-correct empty frame."""
+        if not files:
+            if not snap.files:
+                raise ValueError(
+                    f"table {self.path} has no data at version {snap.version}"
+                )
+            return self._read_resolved(snap, snap.files, schemas).where(
+                F.lit(False)
             )
-
-        if not schemas:
-            return _finish(_scan(files))
-        current = schemas[-1]["fields"]
-        cur_names = {f["name"] for f in current}
+        scans, types = snap.scan_plan(files, schemas)
+        pos = ["__file", "__pos"] if with_positions else []
         parts = []
-        for key, fs in self._era_groups(files, schemas, commits).items():
-            mapping = dict(key)
-            df = _scan(fs)
-            group_dvs = {f: dvs[f] for f in fs if f in dvs}
-            if group_dvs or with_positions:
+        for fs, sch, part in scans:
+            df = self.spark.read.schema(
+                _struct_from_rec(list(sch.items()))
+            ).parquet(*[str(self.path / self.DATA_DIR / f) for f in fs])
+            dv_files = [snap.dvs[f] for f in fs if f in snap.dvs]
+            if dv_files or with_positions:
                 # DV application must touch the RAW scan (the _metadata
                 # struct resolves only there), before the era projection
                 df = self._apply_dvs(
-                    df,
-                    self._dv_rows(list(group_dvs.values()))
-                    if group_dvs
-                    else None,
-                    True,
+                    df, self._dv_rows(dv_files) if dv_files else None, True
                 )
-            claimed = {pn for pn in mapping.values() if pn}
-            cols = [
-                F.col(mapping[f["id"]]).alias(f["name"])
-                for f in current
-                if mapping.get(f["id"]) and mapping[f["id"]] in df.columns
-            ]
-            # unregistered additive columns pass through under their own
-            # (physical == logical) name — except hidden partition-
-            # transform columns (__p_*), which are layout metadata only
-            cols += [
-                F.col(c)
-                for c in df.columns
-                if c not in claimed
-                and c not in cur_names
-                and c not in ("__file", "__pos")
-                and not c.startswith("__p_")
-            ]
-            if with_positions:
-                cols += [F.col("__file"), F.col("__pos")]
-            parts.append(df.select(*cols))
+            # project only when the scan is not already the era's logical
+            # frame: every select costs driver round-trips on the hot
+            # merge path, and an untouched scan needs none
+            if df.columns != [p for p, _ in part] + pos or any(
+                p != lg or sch[p] != types[lg] for p, lg in part
+            ):
+                cols = []
+                for p, lg in part:
+                    c = _col(p)
+                    if sch[p] != types[lg]:
+                        c = c.cast(_struct_from_rec([[lg, types[lg]]])[0].dataType)
+                    cols.append(c.alias(lg))
+                df = df.select(*cols, *pos)
+            parts.append(df)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
+        if out.columns != [*types, *pos]:
+            out = out.select(*[_col(c) for c in types], *pos)
         return out
 
-    def _stats_physical_name(
-        self,
-        column: str,
-        file: str,
-        schemas: list[dict],
-        addv: dict[str, int],
-    ) -> str | None:
-        """The PHYSICAL name logical ``column`` had when ``file`` was
-        written — the key its committed stats live under.  None means
-        the column did not exist for that file (callers must treat the
-        file as unprunable... it trivially contains no such values, but
-        evolution-added columns surface as null there, and null never
-        passes a range filter — so skipping is also sound; we return
-        None and let callers read conservatively)."""
-        if not schemas:
-            return column
-        current = schemas[-1]["fields"]
-        fid = next(
-            (f["id"] for f in current if f["name"] == column), None
-        )
-        if fid is None:
-            # unregistered additive column: physical == logical everywhere
-            return column
-        return self._physical_name(fid, addv.get(file, 0), schemas)
-
-    def file_stats(self, commits: list[dict] | None = None) -> dict[str, dict]:
-        """name -> {column: [min, max]} harvested at commit time.  Keys
-        are PHYSICAL write-era column names; resolve logical names
-        through _stats_physical_name on evolved tables."""
-        out: dict[str, dict] = {}
-        for c in self._commits() if commits is None else commits:
-            out.update(c.get("stats", {}))
-        return out
+    def file_stats(self) -> dict[str, dict]:
+        """Live file name -> the stats harvested when it was written:
+        {column: [min, max]} plus ``__rows__``, ``__nulls__``,
+        ``__schema__`` and ``__bloom__``.  Column keys are PHYSICAL
+        write-era names; ``Snapshot.stat`` resolves logical names."""
+        return self.snapshot().stats
 
     def read_pruned(
         self,
@@ -863,43 +946,14 @@ class TxnTable:
         return self.read_pruned_multi([(column, lower, upper)], version)
 
     def prune_files(
-        self,
-        preds: list[tuple],
-        version: int | None = None,
-        commits: list[dict] | None = None,
+        self, preds: list[tuple], version: int | None = None
     ) -> list[str]:
         """Files of the ``version`` snapshot whose committed [min, max]
         stats can intersect EVERY ``(column, lower, upper)`` predicate —
         the planning half of multi-dimensional data skipping (a z-order
         clustered layout keeps BOTH columns' per-file bands narrow, so a
-        2-D box predicate prunes on each dimension independently).  Files
-        without stats for a column are kept — pruning is an optimization,
-        never a correctness gate."""
-        commits = self._commits() if commits is None else commits
-        files = self.live_files(version, commits=commits)
-        target = version if version is not None else self.latest_version()
-        schemas = self._schema_commits(target, commits=commits)
-        addv = self._file_add_versions(commits) if schemas else {}
-        stats = self.file_stats(commits)
-        chosen = []
-        for f in files:
-            keep = True
-            for column, lower, upper in preds:
-                pname = self._stats_physical_name(column, f, schemas, addv)
-                s = stats.get(f, {}).get(pname) if pname else None
-                if s is None:
-                    continue
-                mn, mx = s
-                lo = _stat_bound(mx, lower) if lower is not None else None
-                hi = _stat_bound(mn, upper) if upper is not None else None
-                if (lo is not None and mx < lo) or (
-                    hi is not None and mn > hi
-                ):
-                    keep = False
-                    break
-            if keep:
-                chosen.append(f)
-        return chosen
+        2-D box predicate prunes on each dimension independently)."""
+        return self.snapshot(version).prune(preds)
 
     def read_pruned_multi(
         self, preds: list[tuple], version: int | None = None
@@ -907,19 +961,8 @@ class TxnTable:
         """Data-skipping read over a CONJUNCTION of range predicates:
         open only the files prune_files keeps, then apply the exact
         filters on top (stats prune files, the filters prune rows)."""
-        commits = self._commits()
-        if not self.live_files(version, commits=commits):
-            raise ValueError(f"table {self.path} has no data")
-        target = version if version is not None else self.latest_version()
-        schemas = self._schema_commits(target, commits=commits)
-        chosen = self.prune_files(preds, version, commits=commits)
-        if not chosen:
-            return (
-                self.read(version).where(F.lit(False))
-            )  # schema-correct empty frame
-        df = self._read_resolved(
-            chosen, schemas, commits, dvs=self.dv_map(target, commits)
-        )
+        snap = self.snapshot(version)
+        df = self._read_resolved(snap, snap.prune(preds))
         for column, lower, upper in preds:
             if lower is not None:
                 df = df.where(F.col(column) >= F.lit(lower))
@@ -950,11 +993,7 @@ class TxnTable:
         return self.read(version=self.version_as_of(timestamp))
 
     def prune_files_values(
-        self,
-        column: str,
-        values,
-        version: int | None = None,
-        commits: list[dict] | None = None,
+        self, column: str, values, version: int | None = None
     ) -> list[str]:
         """Files of the snapshot whose committed [min, max] for ``column``
         can contain ANY of the discrete ``values`` — the membership twin
@@ -973,43 +1012,10 @@ class TxnTable:
         range stats: a dropped-and-re-added column resolves to a
         different field id, so pname misses the old era's bloom and the
         file is kept."""
-        commits = self._commits() if commits is None else commits
-        files = self.live_files(version, commits=commits)
-        target = version if version is not None else self.latest_version()
-        schemas = self._schema_commits(target, commits=commits)
-        addv = self._file_add_versions(commits) if schemas else {}
-        stats = self.file_stats(commits)
-        vals = list(values)
-        chosen = []
-        for f in files:
-            st = stats.get(f, {})
-            pname = self._stats_physical_name(column, f, schemas, addv)
-            s = st.get(pname) if pname else None
-            bl = (st.get("__bloom__") or {}).get(pname) if pname else None
-            if s is None and bl is None:
-                chosen.append(f)
-                continue
-            bits = set(bl["bits"]) if bl is not None else None
-
-            def _may_match(w):
-                in_range = s is None or (
-                    s[0] <= _stat_bound(s[0], w) <= s[1]
-                )
-                return in_range and (
-                    bits is None
-                    or _bloom_maybe(bits, bl["m"], bl["k"], w)
-                )
-
-            if any(_may_match(w) for w in vals):
-                chosen.append(f)
-        return chosen
+        return self.snapshot(version).prune_values(column, values)
 
     def prune_files_nullness(
-        self,
-        column: str,
-        is_null: bool,
-        version: int | None = None,
-        commits: list[dict] | None = None,
+        self, column: str, is_null: bool, version: int | None = None
     ) -> list[str]:
         """Files of the snapshot that can contain a row matching
         ``column IS NULL`` (``is_null=True``) or ``IS NOT NULL`` — the
@@ -1018,47 +1024,9 @@ class TxnTable:
         committed null count is 0, an IS NOT NULL predicate skips
         all-null files (null count == row count).  Files without a null
         count for the column are kept — pruning is an optimization,
-        never a correctness gate (same rule as min/max)."""
-        commits = self._commits() if commits is None else commits
-        files = self.live_files(version, commits=commits)
-        target = version if version is not None else self.latest_version()
-        schemas = self._schema_commits(target, commits=commits)
-        addv = self._file_add_versions(commits) if schemas else {}
-        stats = self.file_stats(commits)
-        # Nullness needs STRICTER name resolution than range pruning: for
-        # a range predicate a stale same-name stat is sound (the old
-        # column's values surface as NULL, and NULL never matches a
-        # range), but for IS NULL that same stale nulls=0 would wrongly
-        # skip a file whose rows ALL surface as NULL.  On an evolved
-        # table, trust a null count only for a column REGISTERED in the
-        # current schema (field-id-resolved per era); unregistered
-        # additive columns read conservatively.
-        if schemas:
-            current = schemas[-1]["fields"]
-            fid = next(
-                (f["id"] for f in current if f["name"] == column), None
-            )
-        chosen = []
-        for f in files:
-            st = stats.get(f, {})
-            if st.get("__rows__") == 0:
-                continue  # provably empty: nothing to match either way
-            if not schemas:
-                pname = column
-            elif fid is None:
-                pname = None
-            else:
-                pname = self._physical_name(fid, addv.get(f, 0), schemas)
-            nc = (st.get("__nulls__") or {}).get(pname) if pname else None
-            rows = st.get("__rows__")
-            if nc is None:
-                chosen.append(f)
-            elif is_null:
-                if nc > 0:
-                    chosen.append(f)
-            elif rows is None or nc < rows:
-                chosen.append(f)
-        return chosen
+        never a correctness gate (same rule as min/max).  See
+        ``Snapshot.prune_nullness`` for the strict name resolution."""
+        return self.snapshot(version).prune_nullness(column, is_null)
 
     def read_pruned_nullness(
         self, column: str, is_null: bool, version: int | None = None
@@ -1068,19 +1036,8 @@ class TxnTable:
         predicate on top (stats prune files, the filter prunes rows) —
         read_pruned's contract extended to nullness, per Delta's
         nullCount skipping."""
-        commits = self._commits()
-        if not self.live_files(version, commits=commits):
-            raise ValueError(f"table {self.path} has no data")
-        target = version if version is not None else self.latest_version()
-        schemas = self._schema_commits(target, commits=commits)
-        chosen = self.prune_files_nullness(
-            column, is_null, version, commits=commits
-        )
-        if not chosen:
-            return self.read(version).where(F.lit(False))
-        df = self._read_resolved(
-            chosen, schemas, commits, dvs=self.dv_map(target, commits)
-        )
+        snap = self.snapshot(version)
+        df = self._read_resolved(snap, snap.prune_nullness(column, is_null))
         pred = F.col(column).isNull() if is_null else F.col(column).isNotNull()
         return df.where(pred)
 
@@ -1091,63 +1048,19 @@ class TxnTable:
         consumer of prune_files/prune_files_values); an empty list
         returns a schema-correct empty frame instead of crashing on a
         zero-path parquet scan."""
-        commits = self._commits()
-        target = version if version is not None else self.latest_version()
-        schemas = self._schema_commits(target, commits=commits)
-        if not files:
-            return self.read(version).where(F.lit(False))
-        return self._read_resolved(
-            files, schemas, commits, dvs=self.dv_map(target, commits)
-        )
+        return self._read_resolved(self.snapshot(version), files)
 
     def is_committed(self, app_txn_id: str) -> bool:
-        return any(c.get("app_txn_id") == app_txn_id for c in self._commits())
+        return any(
+            c.get("app_txn_id") == app_txn_id for c in self.commits_iter()
+        )
 
     # ------------------------------------------------------- constraints
-    def constraints(
-        self, version: int | None = None, commits: list[dict] | None = None
-    ) -> dict[str, str]:
+    def constraints(self, version: int | None = None) -> dict[str, str]:
         """name -> CHECK predicate SQL in force at ``version`` (Delta's
         table constraints): folded from set/drop commits; checkpoint
         commits carry the live set forward."""
-        return self._constraints_fold(version, commits)[0]
-
-    def constraint_set_versions(
-        self, version: int | None = None, commits: list[dict] | None = None
-    ) -> dict[str, int]:
-        """name -> the version at which each LIVE constraint's current
-        predicate was set (checkpoint-carried constraints stamp at the
-        checkpoint version — conservative, since every retained version
-        is >= it).  restore_version uses this to validate restored
-        content only against constraints NEWER than the restore point."""
-        return self._constraints_fold(version, commits)[1]
-
-    def _constraints_fold(
-        self, version: int | None, commits: list[dict] | None
-    ) -> tuple[dict[str, str], dict[str, int]]:
-        """THE commit-log constraint replay — the single fold both
-        constraints() and constraint_set_versions() read, so a change to
-        the constraint commit shape can never diverge the two."""
-        v = self.latest_version() if version is None else version
-        commits = self._commits() if commits is None else commits
-        out: dict[str, str] = {}
-        set_at: dict[str, int] = {}
-        for c in commits:
-            if c["version"] > v:
-                break
-            if c.get("base"):
-                out = dict(c.get("constraints") or {})
-                set_at = {n: c["version"] for n in out}
-                continue
-            ck = c.get("constraint")
-            if ck:
-                if ck.get("sql") is None:
-                    out.pop(ck["name"], None)
-                    set_at.pop(ck["name"], None)
-                else:
-                    out[ck["name"]] = ck["sql"]
-                    set_at[ck["name"]] = c["version"]
-        return out, set_at
+        return self.snapshot(version).constraints
 
     @staticmethod
     def _satisfies(predicate_sql: str):
@@ -1169,16 +1082,20 @@ class TxnTable:
         costs one filtered count over each WRITE BATCH (batch-sized,
         map-only), never a standing-table scan.  NULL predicate results
         violate, matching _validate_adds (see _satisfies)."""
-        try:
-            bad = self.read().where(~self._satisfies(predicate_sql)).count()
-        except ValueError:
-            bad = 0  # empty table: vacuously satisfied
+        snap = self.snapshot()
+        bad = (
+            self._read_resolved(snap, snap.files)
+            .where(~self._satisfies(predicate_sql))
+            .count()
+            if snap.files
+            else 0  # empty table: vacuously satisfied
+        )
         if bad:
             raise ConstraintViolation(
                 f"existing snapshot has {bad} rows violating {name!r}: "
                 f"{predicate_sql}"
             )
-        v = self.latest_version() + 1
+        v = snap.version + 1
         if not self._try_commit(
             v,
             "set_constraint",
@@ -1203,7 +1120,7 @@ class TxnTable:
             raise TxnConflict(f"drop_constraint {name!r} lost a version race")
         return v
 
-    def _validate_adds(self, adds: list[str]) -> dict[str, str]:
+    def _validate_adds(self, adds: dict[str, dict]) -> dict[str, str]:
         """Validate freshly WRITTEN (still-invisible) staged files against
         the live CHECK constraints, by reading the parquet back — never by
         re-evaluating the batch DAG.  Re-evaluation would be both unsound
@@ -1214,27 +1131,18 @@ class TxnTable:
         _satisfies rule).  On violation the staged files are unlinked and
         ConstraintViolation raises: nothing was ever visible.  Returns the
         constraint set validated against, so commit-retry loops can detect
-        a concurrent set_constraint and re-validate (see append)."""
+        a concurrent set_constraint and re-validate (see append).
+        ``adds`` is the name -> stats map ``_write_files`` returned: every
+        staged file of one write shares its recorded schema, so the
+        read-back opens no footer."""
         live = self.constraints()
         if not live or not adds:
             return live
-        # All staged files of one write share the writing df's schema —
-        # it is sitting in _pending_stats — so the read-back never needs
-        # a mergeSchema footer job either.
-        rec = (
-            getattr(self, "_pending_stats", {})
-            .get(adds[0], {})
-            .get("__schema__")
-        )
-        reader = self.spark.read
-        if rec is not None:
-            reader = reader.schema(_struct_from_rec(rec))
-        else:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(
+        rec = next(iter(adds.values()))["__schema__"]
+        df = self.spark.read.schema(_struct_from_rec(rec)).parquet(
             *[str(self.path / self.DATA_DIR / f) for f in adds]
         )
-        self._raise_violations(df, live, cleanup=adds)
+        self._raise_violations(df, live, cleanup=list(adds))
         return live
 
     def _raise_violations(
@@ -1264,24 +1172,27 @@ class TxnTable:
                 )
 
     # ---------------------------------------------------------------- write
-    def _write_files(self, df: DataFrame) -> list[str]:
-        """Write df as immutable parquet files under data/, return names.
-        Files are INVISIBLE until a commit names them.  Per-file column
-        min/max stats are harvested from the parquet footers into
-        ``self._pending_stats`` for the next commit — the data-skipping
-        metadata (Delta-style) read_pruned() prunes on."""
+    def _write_files(
+        self, df: DataFrame, snap: Snapshot | None = None
+    ) -> dict[str, dict]:
+        """Write df as immutable parquet files under data/ and return
+        name -> stats for the commit that will name them (files are
+        INVISIBLE until then).  Per-file column min/max, null and row
+        counts are harvested from the parquet footers — the data-skipping
+        metadata (Delta-style) read_pruned() prunes on.  ``snap``
+        (default: the latest snapshot) supplies the declared bloom
+        columns."""
         token = uuid.uuid4().hex
         tmp = self.path / f"_staging_{token}"
         df.write.mode("overwrite").parquet(str(tmp))
-        names = []
         stats: dict[str, dict] = {}
         # The write SCHEMA rides the commit under a reserved stats key
         # (like __rows__/__nulls__/__bloom__, and carried forward by
-        # expire_snapshots' stats fold): every part file of this write has
+        # expire_snapshots' checkpoint): every part file of this write has
         # exactly df's columns and Spark types, so readers can reconstruct
-        # an era group's merged schema from the log ALONE — no mergeSchema
-        # footer job, no driver-side footer loop (Iceberg records schemas
-        # in commit metadata for the same reason).  Nullability is not
+        # an era group's merged schema from the log ALONE — no footer
+        # is opened to plan a read (Iceberg records schemas in commit
+        # metadata for the same reason).  Nullability is not
         # recorded: file-based scans surface every column nullable.
         schema_rec = [
             [f.name, f.dataType.json()] for f in df.schema.fields
@@ -1290,12 +1201,11 @@ class TxnTable:
         # era's PHYSICAL names (a concurrent declaration landing after
         # this read just leaves these files bloom-less — conservative,
         # never wrong)
-        bspec = self._bloom_write_targets()
+        bspec = (snap or self.snapshot()).bloom_targets()
         for i, part in enumerate(sorted(tmp.glob("part-*.parquet"))):
             name = f"{token}-{i:05d}.parquet"
             dest = self.path / self.DATA_DIR / name
             os.rename(part, dest)
-            names.append(name)
             stats[name] = _footer_stats(dest)
             stats[name]["__schema__"] = schema_rec
             if bspec:
@@ -1303,79 +1213,31 @@ class TxnTable:
                 if bl:
                     stats[name]["__bloom__"] = bl
         shutil.rmtree(tmp)
-        self._pending_stats = getattr(self, "_pending_stats", {})
-        self._pending_stats.update(stats)
-        return names
-
-    def _bloom_write_targets(self) -> dict[str, dict]:
-        """Declared bloom columns resolved to the CURRENT write era's
-        physical names — the name the file about to be written actually
-        carries.  Field-id-recorded declarations survive renames the way
-        the rest of the stats machinery does (probe-side pname
-        resolution lands on the same per-era physical name).  Memoized
-        per commit-log version: latest_version() is a cheap directory
-        glob, so the common bloom-less table pays no JSON log parse on
-        the hot write path (every append/DV write funnels through
-        here)."""
-        v = self.latest_version()
-        cached = getattr(self, "_bloom_cache", None)
-        if cached is not None and cached[0] == v:
-            return cached[1]
-        spec = bloom_spec(self)
-        if spec:
-            schemas = self._schema_commits()
-            if schemas:
-                resolved: dict[str, dict] = {}
-                for c, mk in spec.items():
-                    fid = mk.get("field_id")
-                    if fid is None:
-                        # name-only declaration (made before any schema
-                        # history existed): the name refers to the column
-                        # AS OF the declaration version — find the field
-                        # whose physical name in that era matches
-                        at = mk.get("declared_at", 0)
-                        fid = next(
-                            (
-                                f["id"]
-                                for f in schemas[-1]["fields"]
-                                if self._physical_name(f["id"], at, schemas)
-                                == c
-                            ),
-                            None,
-                        )
-                    pname = (
-                        self._physical_name(fid, v + 1, schemas)
-                        if fid is not None
-                        else None
-                    )
-                    if pname is not None:
-                        resolved[pname] = mk
-                spec = resolved
-        self._bloom_cache = (v, spec)
-        return spec
+        return stats
 
     def _try_commit(
         self,
         version: int,
         op: str,
-        adds: list[str],
+        adds,
         removes: list[str],
         app_txn_id: str | None,
         extra: dict | None = None,
     ) -> bool:
         """Atomically publish ``version``; False if someone else won it.
+        ``adds`` is the name -> stats map ``_write_files`` returned (or
+        plain names, for files whose stats an earlier commit records);
         ``extra`` merges additional metadata into the commit (schema
         evolution records)."""
-        pending = getattr(self, "_pending_stats", {})
         payload = json.dumps(
             {
                 "version": version,
                 "op": op,
-                "adds": adds,
+                "adds": list(adds),
                 "removes": removes,
                 "app_txn_id": app_txn_id,
                 "committed_at": time.time(),
-                "stats": {n: pending[n] for n in adds if n in pending},
+                "stats": adds if isinstance(adds, dict) else {},
                 **(extra or {}),
             },
             indent=1,
@@ -1448,17 +1310,17 @@ class TxnTable:
         this to overlapping files)."""
         if app_txn_id is not None and self.is_committed(app_txn_id):
             return self.latest_version()
-        base_version = self.latest_version()
-        base_files = self.live_files(base_version)
+        snap = self.snapshot()
+        base_version, base_files = snap.version, list(snap.files)
         if base_files:
-            base = self.read(base_version)
+            base = self._read_resolved(snap, base_files)
             merged = (
                 base.join(updates.select(*keys), keys, "left_anti")
                 .unionByName(updates)
             )
         else:
             merged = updates
-        adds = self._write_files(merged)
+        adds = self._write_files(merged, snap)
         self._validate_adds(adds)
         if not self._try_commit(
             base_version + 1, "merge", adds, base_files, app_txn_id
@@ -1486,15 +1348,15 @@ class TxnTable:
         makes re-delivery a no-op (exactly-once CDC apply)."""
         if app_txn_id is not None and self.is_committed(app_txn_id):
             return self.latest_version()
-        base_version = self.latest_version()
-        base_files = self.live_files(base_version)
+        snap = self.snapshot()
+        base_version, base_files = snap.version, list(snap.files)
         if not base_files:
             # deleting from an empty table: nothing to rewrite, no commit
             return base_version
-        remaining = self.read(base_version).join(
+        remaining = self._read_resolved(snap, base_files).join(
             keys_df.select(*keys), keys, "left_anti"
         )
-        adds = self._write_files(remaining)
+        adds = self._write_files(remaining, snap)
         if not self._try_commit(
             base_version + 1, "delete", adds, base_files, app_txn_id
         ):
@@ -1537,16 +1399,11 @@ class TxnTable:
         v2 positional delete files are this exact design."""
         if app_txn_id is not None and self.is_committed(app_txn_id):
             return self.latest_version()
-        commits = self._commits()
-        base_version = self.latest_version()
-        base_files = self.live_files(base_version, commits=commits)
+        snap = self.snapshot()
+        base_version, base_files, dvs = snap.version, snap.files, snap.dvs
         if not base_files:
             return base_version
-        schemas = self._schema_commits(base_version, commits=commits)
-        dvs = self.dv_map(base_version, commits)
-        with_pos = self._read_resolved(
-            base_files, schemas, commits, dvs=dvs, with_positions=True
-        )
+        with_pos = self._read_resolved(snap, base_files, with_positions=True)
         hits = (
             with_pos.join(keys_df.select(*keys), keys, "left_semi")
             .select(
@@ -1570,7 +1427,7 @@ class TxnTable:
             ).distinct()
         # one vector file per commit (DVs are small by construction —
         # deleted positions, not data); every touched file maps to it
-        dv_adds = self._write_files(new_rows.coalesce(1))
+        dv_adds = list(self._write_files(new_rows.coalesce(1), snap))
         if not self._try_commit(
             base_version + 1,
             "delete_dv",
@@ -1690,23 +1547,19 @@ def compact(
     rewrite repartitions to ceil(total / target_rows) files.  Default
     remains a single file (test-scale tables); production picks
     target_rows so a file lands near the ~128 MB scan-friendly size."""
-    base_version = table.latest_version()
-    base_files = table.live_files(base_version)
+    snap = table.snapshot()
+    base_version, base_files = snap.version, list(snap.files)
     if not base_files:
         return base_version
     if app_txn_id is not None and table.is_committed(app_txn_id):
         return table.latest_version()
-    snapshot = table.read(base_version)
+    data = table._read_resolved(snap, base_files)
     if target_rows:
-        stats = table.file_stats()
-        total = sum(
-            stats.get(f, {}).get("__rows__", 0) or 0 for f in base_files
-        )
-        n_out = max(1, -(-total // target_rows))
-        snapshot = snapshot.repartition(n_out)
+        total = sum(snap.stats[f]["__rows__"] for f in base_files)
+        data = data.repartition(max(1, -(-total // target_rows)))
     else:
-        snapshot = snapshot.coalesce(1)
-    adds = table._write_files(snapshot)
+        data = data.coalesce(1)
+    adds = table._write_files(data, snap)
     if not table._try_commit(
         base_version + 1, "compact", adds, base_files, app_txn_id
     ):
@@ -1720,22 +1573,20 @@ def compact(
 
 def _cluster_curve_expr(
     table: TxnTable,
-    base_files: list[str],
+    snap: Snapshot,
     col_a: str,
     col_b: str,
     bits: int,
     curve: str,
-    commits: list[dict],
-    base_version: int,
 ):
     """The shared grid machinery of cluster_zorder / cluster_incremental:
     validate the curve, derive each column's global [lo, hi] from the
-    committed per-file stats fold over ``base_files`` (driver-side, no
-    data scan; one aggregate fallback when stats are missing), and return
-    the curve value expression over the uniform 2^bits width_bucket cells.
-    Incremental clustering passes the FULL snapshot's files here even
-    though it rewrites only the tail, so tail files land on the same cell
-    lattice as the clustered bulk."""
+    committed per-file stats of ALL of ``snap``'s live files (driver-side,
+    no data scan; one aggregate fallback when stats are missing), and
+    return the curve value expression over the uniform 2^bits
+    width_bucket cells.  Incremental clustering rewrites only the tail
+    but takes its bounds from the full snapshot here, so tail files land
+    on the same cell lattice as the clustered bulk."""
     from aws_genaric_datapipeline_spark.operators.layout import (
         hilbert_value,
         zorder_value,
@@ -1744,23 +1595,19 @@ def _cluster_curve_expr(
     if curve not in ("zorder", "hilbert"):
         raise ValueError(f"unknown curve {curve!r}")
     curve_fn = zorder_value if curve == "zorder" else hilbert_value
-    schemas = table._schema_commits(base_version, commits=commits)
-    addv = table._file_add_versions(commits) if schemas else {}
-    stats = table.file_stats(commits)
     bounds: dict[str, tuple] = {}
     for col in (col_a, col_b):
         lo = hi = None
         have_all = True
-        for f in base_files:
-            pname = table._stats_physical_name(col, f, schemas, addv)
-            s = stats.get(f, {}).get(pname) if pname else None
+        for f in snap.files:
+            s = snap.stat(f, col)
             if s is None:
                 have_all = False
                 break
             lo = s[0] if lo is None else min(lo, s[0])
             hi = s[1] if hi is None else max(hi, s[1])
         if not have_all:
-            row = table.read(base_version).agg(
+            row = table._read_resolved(snap, snap.files).agg(
                 F.min(col).alias("lo"), F.max(col).alias("hi")
             ).collect()[0]
             lo, hi = row["lo"], row["hi"]
@@ -1824,22 +1671,19 @@ def cluster_zorder(
         raise ValueError(f"unknown curve {curve!r}")
     if app_txn_id is not None and table.is_committed(app_txn_id):
         return table.latest_version()
-    commits = table._commits()
-    base_version = table.latest_version()
-    base_files = table.live_files(base_version, commits=commits)
+    snap = table.snapshot()
+    base_version, base_files = snap.version, list(snap.files)
     if not base_files:
         return base_version
-    snapshot = table.read(base_version)
-    zcol = _cluster_curve_expr(
-        table, base_files, col_a, col_b, bits, curve, commits, base_version
-    )
+    zcol = _cluster_curve_expr(table, snap, col_a, col_b, bits, curve)
     clustered = (
-        snapshot.withColumn("__z", zcol)
+        table._read_resolved(snap, base_files)
+        .withColumn("__z", zcol)
         .repartitionByRange(num_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
     )
-    adds = table._write_files(clustered)
+    adds = table._write_files(clustered, snap)
     if not table._try_commit(
         base_version + 1, "cluster", adds, base_files, app_txn_id
     ):
@@ -1886,13 +1730,14 @@ def cluster_incremental(
             "n_clustered": 0,
             "n_untouched": len(table.live_files()),
         }
-    commits = table._commits()
-    base_version = table.latest_version()
-    base_files = table.live_files(base_version, commits=commits)
-    clustered_files: set[str] = set()
-    for c in commits:
-        if c["op"] in ("cluster", "cluster_incremental"):
-            clustered_files.update(c["adds"])
+    snap = table.snapshot()
+    base_version, base_files = snap.version, snap.files
+    clustered_files = {
+        f
+        for c in table.commits_iter()
+        if c["op"] in ("cluster", "cluster_incremental")
+        for f in c["adds"]
+    }
     tail = [f for f in base_files if f not in clustered_files]
     if not tail:
         return {
@@ -1902,17 +1747,15 @@ def cluster_incremental(
         }
     # same grid as cluster_zorder, over the FULL snapshot's bounds so the
     # tail lands on the same cell lattice as the clustered bulk
-    snapshot_tail = table.read_files(tail, version=base_version)
-    zcol = _cluster_curve_expr(
-        table, base_files, col_a, col_b, bits, curve, commits, base_version
-    )
+    zcol = _cluster_curve_expr(table, snap, col_a, col_b, bits, curve)
     rewritten = (
-        snapshot_tail.withColumn("__z", zcol)
+        table._read_resolved(snap, tail)
+        .withColumn("__z", zcol)
         .repartitionByRange(num_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
     )
-    adds = table._write_files(rewritten)
+    adds = table._write_files(rewritten, snap)
     if not table._try_commit(
         base_version + 1, "cluster_incremental", adds, tail, app_txn_id
     ):
@@ -1954,9 +1797,8 @@ def restore_version(
     wins and this raises TxnConflict."""
     if app_txn_id is not None and table.is_committed(app_txn_id):
         return table.latest_version()
-    commits = table._commits()
-    base_version = table.latest_version()
-    known = {c["version"] for c in commits}
+    known = {c["version"] for c in table.commits_iter()}
+    base_version = max(known, default=0)
     if min(known, default=1) == 1:
         known.add(0)  # pre-first-commit empty table, unless expiry cut it off
     if version not in known:
@@ -1964,32 +1806,37 @@ def restore_version(
             f"cannot restore to version {version}: not in retained history "
             f"(latest is {base_version})"
         )
-    target_files = table.live_files(version, commits=commits)
+    cur, target = table.snapshot(base_version), table.snapshot(version)
     # constraints set after the restore point: the only ones the restored
-    # snapshot has never been validated against (shared fold — see
-    # _constraints_fold)
-    live, set_at = table._constraints_fold(base_version, commits)
+    # snapshot has never been validated against
     to_check = {
-        n: sql for n, sql in live.items() if set_at.get(n, 0) > version
+        n: sql
+        for n, sql in cur.constraints.items()
+        if cur.constraint_set_at.get(n, 0) > version
     }
-    if to_check and target_files:
-        table._raise_violations(table.read(version), to_check)
-    current_files = table.live_files(base_version, commits=commits)
-    dvs = table.dv_map(version, commits)
-    cur_dvs = table.dv_map(base_version, commits)
-    adds = [f for f in target_files if f not in set(current_files)]
-    removes = [f for f in current_files if f not in set(target_files)]
+    if to_check and target.files:
+        table._raise_violations(
+            table._read_resolved(target, target.files), to_check
+        )
+    shared = set(target.files) & set(cur.files)
+    # re-added files carry their stats and original write era, so the
+    # restore commit stays self-contained once expiry drops their origin
+    adds = {f: target.stats[f] for f in target.files if f not in shared}
+    removes = [f for f in cur.files if f not in shared]
     # shared files must end with EXACTLY the restore point's DV state:
     # re-declare its mapping, and explicitly CLEAR (None marker) any
     # vector added after the restore point on a file both snapshots share
-    dv_updates: dict = dict(dvs)
-    for f in set(target_files) & set(current_files):
-        if f in cur_dvs and f not in dvs:
+    dv_updates: dict = dict(target.dvs)
+    for f in shared:
+        if f in cur.dvs and f not in target.dvs:
             dv_updates[f] = None
-    extra: dict = {"restored_version": version}
+    extra: dict = {
+        "restored_version": version,
+        "add_versions": {f: target.add_versions[f] for f in adds},
+    }
     if dv_updates:
         extra["dv_updates"] = dv_updates
-        extra["dv_files"] = sorted({d for d in dvs.values()})
+        extra["dv_files"] = sorted(set(target.dvs.values()))
     if not table._try_commit(
         base_version + 1, "restore", adds, removes, app_txn_id, extra=extra
     ):
@@ -2005,15 +1852,15 @@ def expire_snapshots(table: TxnTable, keep_last: int) -> list[int]:
     from the log, and the cutoff version's commit is REWRITTEN as a
     self-contained checkpoint (its full live file set as adds, no
     removes), so replay from the truncated log reconstructs every
-    retained version bit-for-bit.  Per-file column stats for the
-    checkpointed files are carried over, so read_pruned() skips exactly
-    as before.
+    retained version bit-for-bit: the checkpoint is the serialized
+    ``snapshot(cutoff)``, and ``snapshot(v)`` of every retained version
+    is the same before and after.
 
     After expiry, ``vacuum()`` reclaims the data files only expired
     versions referenced — the disk-space payoff (before expiry, vacuum
     keeps them because they back time travel).
 
-    Reading an expired version raises (live_files guard) rather than
+    Reading an expired version raises (``TxnTable.snapshot``) rather than
     silently returning an empty/wrong snapshot.  Two caveats, same as
     the production formats: retention must exceed (a) the oldest
     concurrent reader's pin, (b) the longest possible sink re-delivery
@@ -2031,10 +1878,9 @@ def expire_snapshots(table: TxnTable, keep_last: int) -> list[int]:
     """
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    latest = table.latest_version()
-    cutoff = latest - keep_last + 1
-    commits = table._commits()
-    expired = [c["version"] for c in commits if c["version"] < cutoff]
+    versions = sorted(c["version"] for c in table.commits_iter())
+    cutoff = max(versions, default=0) - keep_last + 1
+    expired = [v for v in versions if v < cutoff]
     if not expired:
         return []
     pinned = {n: v for n, v in _load_refs(table).items() if v in set(expired)}
@@ -2045,76 +1891,20 @@ def expire_snapshots(table: TxnTable, keep_last: int) -> list[int]:
             f"cannot expire tagged versions {sorted(pinned.items())}; "
             f"delete_tag first"
         )
-    live = table.live_files(cutoff)
-    # Stats for the checkpointed files, harvested from any commit that
-    # added them (adds are unique per file name).
-    stats: dict[str, dict] = {}
-    for c in commits:
-        if c["version"] <= cutoff:
-            stats.update(
-                {n: s for n, s in c.get("stats", {}).items() if n in set(live)}
-            )
-    orig = next(c for c in commits if c["version"] == cutoff)
-    # Schema-evolution continuity: the checkpoint carries forward (a) the
-    # full schema-snapshot history at or below the cutoff and (b) each
-    # surviving file's ORIGINAL add version, so field-id resolution for
-    # pre-cutoff files (which keep their write-era physical column names)
-    # still works after the originating commits are unlinked.
-    schema_history = table._schema_commits(cutoff)
-    addv = {
-        f: v
-        for f, v in table._file_add_versions().items()
-        if f in set(live)
-    }
-    # Deletion-vector continuity: the checkpoint re-declares the DV
-    # mapping live at the cutoff (dv_map resets on base commits, so the
-    # checkpoint must carry it) and references the vector files so
-    # vacuum keeps them.
-    dvs = table.dv_map(cutoff, commits)
-    cons = table.constraints(cutoff, commits)
-    ptf = partition_transform(table, cutoff, commits)
-    ptf_hist = partition_transform_history(table, cutoff, commits)
-    blooms = bloom_spec(table, cutoff, commits)
+    with open(table._log_path(cutoff)) as fh:
+        orig = json.load(fh)
+    # The checkpoint IS snapshot(cutoff): live files with their stats and
+    # ORIGINAL add versions (field-id resolution for pre-cutoff files,
+    # which keep their write-era physical column names), the schema
+    # chain, the DV mapping (its vector files stay referenced, so vacuum
+    # keeps them), constraints with their set versions, blooms and
+    # transforms.  The commit time is the ORIGINAL one, not the expiry
+    # wall-time: read_as_of for any instant at which that snapshot was
+    # live must keep resolving to it after expiry.
     payload = json.dumps(
-        {
-            "version": cutoff,
-            "op": "checkpoint",
-            "base": True,
-            "adds": live,
-            "removes": [],
-            "app_txn_id": orig.get("app_txn_id"),
-            # the ORIGINAL commit time, not the expiry wall-time: the
-            # checkpoint REPRESENTS version `cutoff`, and read_as_of for
-            # any instant at which that snapshot was live must keep
-            # resolving to it after expiry
-            "committed_at": orig.get("committed_at", time.time()),
-            "stats": stats,
-            **(
-                {"schema_history": schema_history, "add_versions": addv}
-                if schema_history
-                else {}
-            ),
-            **(
-                {
-                    "dv_updates": dvs,
-                    "dv_files": sorted(set(dvs.values())),
-                }
-                if dvs
-                else {}
-            ),
-            **(
-                {"constraints": cons} if cons else {}
-            ),
-            **(
-                {"partition_transform": ptf} if ptf else {}
-            ),
-            **(
-                {"partition_transform_history": ptf_hist} if ptf_hist else {}
-            ),
-            **(
-                {"bloom_filters": blooms} if blooms else {}
-            ),
-        },
+        table.snapshot(cutoff).checkpoint(
+            orig.get("app_txn_id"), orig.get("committed_at", time.time())
+        ),
         indent=1,
     )
     tmp = table._log_path(cutoff).with_suffix(".tmp")
@@ -2205,6 +1995,17 @@ def table_changes(
     )
 
 
+def _envelope_files(snap: Snapshot, key: str, lo, hi) -> list[str]:
+    """Non-empty live files whose committed ``key`` range can meet the
+    [lo, hi] envelope (files without stats count — pruning never gates
+    correctness): the files a keyed merge must rewrite."""
+    return [
+        f
+        for f in snap.prune([(key, lo, hi)])
+        if snap.stats.get(f, {}).get("__rows__") != 0
+    ]
+
+
 def merge_upsert_pruned(
     table: TxnTable,
     updates: DataFrame,
@@ -2242,11 +2043,8 @@ def merge_upsert_pruned(
             "n_touched": 0,
             "n_carried": len(table.live_files()),
         }
-    commits = table._commits()
-    base_version = table.latest_version()
-    base_files = table.live_files(base_version, commits=commits)
-    schemas = table._schema_commits(base_version, commits=commits)
-    addv = table._file_add_versions(commits) if schemas else {}
+    snap = table.snapshot()
+    base_version, base_files = snap.version, list(snap.files)
     row = updates.agg(
         F.min(key).alias("lo"),
         F.max(key).alias("hi"),
@@ -2266,30 +2064,11 @@ def merge_upsert_pruned(
     if not base_files:
         v = table.merge_upsert(updates, keys=[key], app_txn_id=app_txn_id)
         return {"version": v, "n_touched": 0, "n_carried": 0}
-    stats = table.file_stats(commits)
-    touched, carried = [], []
-    if lo is None:
-        # Non-empty delta whose key is all-NULL: NULL never equi-matches an
-        # existing key, so no base file can contain a matching row — the
-        # correct merge is a pure append (every base file carried).  Without
-        # this guard the stats comparisons below would compare against None.
-        carried = list(base_files)
-    else:
-        for f in base_files:
-            st = stats.get(f, {})
-            if st.get("__rows__") == 0:
-                carried.append(f)  # provably empty: no keys to merge
-                continue
-            # stats live under the file's PHYSICAL write-era key name
-            # (rename/drop transparent — the read_pruned resolution rule)
-            pname = table._stats_physical_name(key, f, schemas, addv)
-            s = st.get(pname) if pname else None
-            if s is None or not (
-                s[1] < _stat_bound(s[1], lo) or s[0] > _stat_bound(s[0], hi)
-            ):
-                touched.append(f)
-            else:
-                carried.append(f)
+    # A non-empty delta whose key is all-NULL (lo None) equi-matches no
+    # existing key: the merge is a pure append, every base file carried.
+    # Otherwise every non-empty file whose key range can meet the delta's
+    # envelope is touched (rename/drop transparent — Snapshot.stat).
+    touched = [] if lo is None else _envelope_files(snap, key, lo, hi)
     if touched:
         # era-mapped read: touched files surface under LOGICAL names, so
         # the anti-join/union against the (logical-named) delta is sound
@@ -2297,18 +2076,13 @@ def merge_upsert_pruned(
         # names (stats re-harvest under those at commit).  Deletion
         # vectors apply here too — a rewrite that ignored a touched
         # file's DV would resurrect its deleted rows.
-        base = table._read_resolved(
-            touched,
-            schemas,
-            commits,
-            dvs=table.dv_map(base_version, commits),
-        )
+        base = table._read_resolved(snap, touched)
         merged = base.join(updates.select(key), [key], "left_anti").unionByName(
             updates, allowMissingColumns=True
         )
     else:
         merged = updates
-    adds = table._write_files(merged)
+    adds = table._write_files(merged, snap)
     table._validate_adds(adds)
     if not table._try_commit(
         base_version + 1, "merge_pruned", adds, touched, app_txn_id
@@ -2322,7 +2096,7 @@ def merge_upsert_pruned(
     return {
         "version": base_version + 1,
         "n_touched": len(touched),
-        "n_carried": len(carried),
+        "n_carried": len(base_files) - len(touched),
     }
 
 
@@ -2372,43 +2146,22 @@ def merge_full_sync(
             "n_dropped": 0,
             "n_dv_files": 0,
         }
-    commits = table._commits()
-    base_version = table.latest_version()
-    base_files = table.live_files(base_version, commits=commits)
-    schemas = table._schema_commits(base_version, commits=commits)
-    addv = table._file_add_versions(commits) if schemas else {}
-    dvs = table.dv_map(base_version, commits)
+    snap = table.snapshot()
+    base_version, base_files, dvs = snap.version, snap.files, snap.dvs
     row = source.agg(
         F.min(key).alias("lo"), F.max(key).alias("hi")
     ).collect()[0]
     lo, hi = row["lo"], row["hi"]
-    stats = table.file_stats(commits)
-    touched: list[str] = []
-    unmatched: list[str] = []  # no source key can live here
-    for f in base_files:
-        st = stats.get(f, {})
-        if st.get("__rows__") == 0:
-            unmatched.append(f)
-            continue
-        pname = table._stats_physical_name(key, f, schemas, addv)
-        s = st.get(pname) if pname else None
-        if lo is not None and (
-            s is None
-            or not (
-                s[1] < _stat_bound(s[1], lo) or s[0] > _stat_bound(s[0], hi)
-            )
-        ):
-            touched.append(f)
-        else:
-            # all-NULL source key (lo None) equi-matches nothing: every
-            # base file is pure not-matched-by-source territory
-            unmatched.append(f)
+    # an all-NULL source key (lo None) equi-matches nothing: every base
+    # file is pure not-matched-by-source territory
+    touched = [] if lo is None else _envelope_files(snap, key, lo, hi)
+    unmatched = sorted(set(base_files) - set(touched))
     # ---- rewrite side: touched files' kept rows + every source row.
     # With no delete condition EVERY unmatched row deletes, so the
     # rewrite is exactly the source; with one, unmatched rows failing
     # the condition survive the rewrite.
     if touched and delete_condition is not None:
-        base = table._read_resolved(touched, schemas, commits, dvs=dvs)
+        base = table._read_resolved(snap, touched)
         kept = base.join(source.select(key), [key], "left_anti").where(
             ~F.coalesce(
                 F.expr(delete_condition).cast("boolean"), F.lit(False)
@@ -2417,7 +2170,7 @@ def merge_full_sync(
         merged = kept.unionByName(source, allowMissingColumns=True)
     else:
         merged = source
-    adds = table._write_files(merged)
+    adds = table._write_files(merged, snap)
     table._validate_adds(adds)
     # ---- delete-by-absence side on unmatched files
     removes = list(touched)
@@ -2429,7 +2182,7 @@ def merge_full_sync(
             removes += unmatched
         else:
             with_pos = table._read_resolved(
-                unmatched, schemas, commits, dvs=dvs, with_positions=True
+                snap, unmatched, with_positions=True
             )
             hits = with_pos.where(
                 F.coalesce(
@@ -2450,7 +2203,7 @@ def merge_full_sync(
                             F.col("file").isin(dv_touched)
                         )
                     ).distinct()
-                dv_adds = table._write_files(new_rows.coalesce(1))
+                dv_adds = list(table._write_files(new_rows.coalesce(1), snap))
                 dv_updates = {f: dv_adds[0] for f in dv_touched}
     extra: dict = {}
     if dv_updates:
@@ -2463,7 +2216,7 @@ def merge_full_sync(
         app_txn_id,
         extra=extra,
     ):
-        for name in adds + dv_adds:
+        for name in [*adds, *dv_adds]:
             (table.path / table.DATA_DIR / name).unlink(missing_ok=True)
         raise TxnConflict(
             f"full-sync merge based on version {base_version} lost to a "
@@ -2533,28 +2286,21 @@ def set_bloom_filter(
     if num_bits < 8 or k < 1:
         raise ValueError("bloom filter requires num_bits >= 8 and k >= 1")
     decl = {"col": column, "m": int(num_bits), "k": int(k)}
-    schemas = table._schema_commits()
-    if schemas:
-        fid = next(
-            (
-                f["id"]
-                for f in schemas[-1]["fields"]
-                if f["name"] == column
-            ),
-            None,
-        )
+    snap = table.snapshot()
+    if snap.schemas:
+        fid = next((f["id"] for f in snap.fields if f["name"] == column), None)
         if fid is None:
             raise ValueError(
                 f"set_bloom_filter: column {column!r} is not in the "
                 f"table's current schema"
             )
         decl["field_id"] = fid
-    elif table.live_files() and column not in table.read().columns:
+    elif snap.files and column not in snap.scan_plan(snap.files)[1]:
         raise ValueError(
             f"set_bloom_filter: column {column!r} is not in the "
             f"table's current schema"
         )
-    v = table.latest_version() + 1
+    v = snap.version + 1
     # the era the (possibly name-only) declaration refers to — lets the
     # write path resolve the name through renames that happen later
     decl["declared_at"] = v
@@ -2565,95 +2311,28 @@ def set_bloom_filter(
     return v
 
 
-def _fold_meta(
-    table: TxnTable,
-    version: int | None,
-    commits: list[dict] | None,
-    carry_key: str,
-    commit_key: str,
-    init,
-    reset,
-    apply,
-):
-    """THE checkpoint-aware commit-log metadata fold shared by
-    partition_transform, partition_transform_history and bloom_spec
-    (mirroring _constraints_fold's discipline, extracted so the
-    version-cap / base-commit-carry rules can never diverge between
-    them): commits at or below ``version``; a checkpoint ("base")
-    commit carrying ``carry_key`` resets the state through ``reset``;
-    any commit carrying ``commit_key`` folds through ``apply``."""
-    v = table.latest_version() if version is None else version
-    commits = table._commits() if commits is None else commits
-    state = init
-    for c in commits:
-        if c["version"] > v:
-            break
-        if c.get("base") and carry_key in c:
-            state = reset(c[carry_key])
-            continue
-        if c.get(commit_key):
-            state = apply(state, c[commit_key])
-    return state
-
-
-def bloom_spec(
-    table: TxnTable,
-    version: int | None = None,
-    commits: list[dict] | None = None,
-) -> dict[str, dict]:
+def bloom_spec(table: TxnTable, version: int | None = None) -> dict[str, dict]:
     """column -> {m, k[, field_id]} bloom declarations in force at
     ``version`` (latest per column wins; expiry checkpoints carry the
     folded map forward under ``bloom_filters``)."""
-    return _fold_meta(
-        table,
-        version,
-        commits,
-        carry_key="bloom_filters",
-        commit_key="bloom_filter",
-        init={},
-        reset=dict,
-        apply=lambda s, d: {
-            **s,
-            d["col"]: {k2: v2 for k2, v2 in d.items() if k2 != "col"},
-        },
-    )
+    return table.snapshot(version).blooms
 
 
 def metadata_count(table: TxnTable, version: int | None = None) -> int:
     """COUNT(*) of the snapshot WITHOUT scanning data files: committed
-    per-file ``__rows__`` stats sum to the physical total, and live
-    deletion vectors subtract their positions (read from the DV files
-    only — O(deleted rows), the same cost class as Delta's stored DV
-    cardinality; a table with no DVs answers purely from the commit
-    log).  Files predating row-count stats (none written by this engine,
-    but a conservative reader assumes nothing) fall back to a real count
-    of just those files.  This is the aggregate-pushdown shape that
-    answers `SELECT count(*)` on a 100 TB table in milliseconds."""
-    commits = table._commits()
-    v = table.latest_version() if version is None else version
-    files = table.live_files(v, commits=commits)
-    stats = table.file_stats(commits)
-    total = 0
-    unknown: list[str] = []
-    for f in files:
-        r = stats.get(f, {}).get("__rows__")
-        if r is None:
-            unknown.append(f)
-        else:
-            total += int(r)
-    dvs = {
-        f: d for f, d in table.dv_map(v, commits).items() if f in set(files)
-    }
-    if unknown:
-        # read_files applies DVs itself — exclude those files from the
-        # DV subtraction below or their deletes would count twice
-        total += table.read_files(unknown, version=v).count()
-        dvs = {f: d for f, d in dvs.items() if f not in set(unknown)}
-    if dvs:
-        counted = set(dvs)
+    per-file ``__rows__`` stats (recorded for every file this engine
+    writes) sum to the physical total, and live deletion vectors
+    subtract their positions (read from the DV files only — O(deleted
+    rows), the same cost class as Delta's stored DV cardinality; a
+    table with no DVs answers purely from the commit log).  This is the
+    aggregate-pushdown shape that answers `SELECT count(*)` on a 100 TB
+    table in milliseconds."""
+    snap = table.snapshot(version)
+    total = sum(int(snap.stats[f]["__rows__"]) for f in snap.files)
+    if snap.dvs:
         total -= (
-            table._dv_rows(sorted(set(dvs.values())))
-            .where(F.col("file").isin(sorted(counted)))
+            table._dv_rows(sorted(set(snap.dvs.values())))
+            .where(F.col("file").isin(sorted(snap.dvs)))
             .select("file", "pos")
             .distinct()
             .count()
@@ -2686,36 +2365,14 @@ def metadata_minmax(
     date/timestamp column the result may come back as ISO strings when
     any metadata stat contributed.  Returns (None, None) for an
     empty/all-null snapshot."""
-    commits = table._commits()
-    v = table.latest_version() if version is None else version
-    files = table.live_files(v, commits=commits)
-    schemas = table._schema_commits(v, commits=commits)
-    addv = table._file_add_versions(commits) if schemas else {}
-    stats = table.file_stats(commits)
-    dvs = table.dv_map(v, commits)
-    if schemas:
-        fid = next(
-            (
-                f["id"]
-                for f in schemas[-1]["fields"]
-                if f["name"] == column
-            ),
-            None,
-        )
+    snap = table.snapshot(version)
     lo = hi = None
     scan: list[str] = []
-    for f in files:
-        st = stats.get(f, {})
-        if st.get("__rows__") == 0:
+    for f in snap.files:
+        if snap.stats.get(f, {}).get("__rows__") == 0:
             continue
-        if not schemas:
-            pname = column
-        elif fid is None:
-            pname = None
-        else:
-            pname = table._physical_name(fid, addv.get(f, 0), schemas)
-        s = st.get(pname) if pname else None
-        if f in dvs or s is None:
+        s = snap.stat(f, column, strict=True)
+        if f in snap.dvs or s is None:
             scan.append(f)
             continue
         mn, mx = s
@@ -2723,7 +2380,7 @@ def metadata_minmax(
         hi = mx if hi is None else max(hi, mx)
     if scan:
         row = (
-            table.read_files(scan, version=v)
+            table._read_resolved(snap, scan)
             .agg(F.min(column).alias("mn"), F.max(column).alias("mx"))
             .collect()[0]
         )
@@ -2768,28 +2425,15 @@ def set_partition_transform(
 
 
 def partition_transform(
-    table: TxnTable,
-    version: int | None = None,
-    commits: list[dict] | None = None,
+    table: TxnTable, version: int | None = None
 ) -> dict | None:
     """The transform spec in force at ``version`` (latest declaration
     wins; expiry checkpoints carry it forward under the same key)."""
-    return _fold_meta(
-        table,
-        version,
-        commits,
-        carry_key="partition_transform",
-        commit_key="partition_transform",
-        init=None,
-        reset=lambda v: v,
-        apply=lambda s, v: v,
-    )
+    return table.snapshot(version).transform
 
 
 def partition_transform_history(
-    table: TxnTable,
-    version: int | None = None,
-    commits: list[dict] | None = None,
+    table: TxnTable, version: int | None = None
 ) -> list[dict]:
     """EVERY transform spec declared at or below ``version``, deduped by
     hidden column name — the partition-EVOLUTION fold (Iceberg's spec
@@ -2800,24 +2444,7 @@ def partition_transform_history(
     checkpoints carry the folded list (``partition_transform_history``);
     a pre-history checkpoint degrades to its single carried spec — old
     eras' files just read conservatively, never wrongly."""
-    specs: list[dict] = _fold_meta(
-        table,
-        version,
-        commits,
-        carry_key="partition_transform_history",
-        commit_key="partition_transform",
-        init=[],
-        reset=list,
-        apply=lambda s, v: s + [v],
-    )
-    seen: set[str] = set()
-    out: list[dict] = []
-    for s in specs:
-        name = _hidden_name(s)
-        if name not in seen:
-            seen.add(name)
-            out.append(s)
-    return out
+    return list(table.snapshot(version).transform_history)
 
 
 def append_clustered(
@@ -2891,7 +2518,6 @@ def prune_files_hidden(
     lower=None,
     upper=None,
     version: int | None = None,
-    commits: list[dict] | None = None,
 ) -> list[str]:
     """Files that can match a RAW-column predicate, answered through the
     hidden transform: ``days`` maps [lower, upper] through the monotonic
@@ -2910,19 +2536,18 @@ def prune_files_hidden(
     era through the bucket, with zero per-file attribution bookkeeping
     (wrong-era stats simply don't exist under the probed name, and a
     missing stat always reads conservatively)."""
-    spec = partition_transform(table, version, commits)
+    snap = table.snapshot(version)
+    spec = snap.transform
     if spec is None:
         raise ValueError("table has no partition transform declared")
-    commits = table._commits() if commits is None else commits
-    files = table.live_files(version, commits=commits)
-    if not files:
+    if not snap.files:
         return []
     if lower is None and upper is None:
-        return files  # no predicate: nothing to prune by
+        return list(snap.files)  # no predicate: nothing to prune by
     is_eq = lower is not None and lower == upper
     usable = [
         e
-        for e in partition_transform_history(table, version, commits)
+        for e in snap.transform_history
         if e["col"] == spec["col"]
         and (e["kind"] in ("days", "truncate") or is_eq)
     ]
@@ -2943,7 +2568,7 @@ def prune_files_hidden(
             tlo = out[0] if lower is not None else None
             thi = out[-1] if upper is not None else None
             preds.append((_hidden_name(e), tlo, thi))
-    return table.prune_files(preds, version, commits=commits)
+    return snap.prune(preds)
 
 
 def read_pruned_hidden(
@@ -2955,13 +2580,10 @@ def read_pruned_hidden(
     """Data-skipping read for a raw-column predicate answered through
     the hidden transform: open only prune_files_hidden's files, then
     apply the exact raw predicate on top."""
-    commits = table._commits()
-    spec = partition_transform(table, version, commits)
-    if spec is None:
-        raise ValueError("table has no partition transform declared")
-    chosen = prune_files_hidden(table, lower, upper, version, commits)
-    df = table.read_files(chosen, version=version)
-    col = F.col(spec["col"])
+    snap = table.snapshot(version)
+    chosen = prune_files_hidden(table, lower, upper, snap.version)
+    df = table._read_resolved(snap, chosen)
+    col = F.col(snap.transform["col"])
     # the exact filter follows the PREDICATE shape, not the current
     # spec's kind — after evolution a range probe is legal on a
     # bucket-current table (old days-era files still prune)

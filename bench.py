@@ -21,348 +21,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from aws_genaric_datapipeline_spark.queries import QUERIES
 from aws_genaric_datapipeline_spark.session import get_spark
 
-# Headline set: exercised per-round by the driver. One representative per
-# engine area: scan/agg, multi-join, windows, setops, json, streaming
-# windows, dedup, similarity, text.
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q6_revenue_forecast",
-    "q10_returned_items",
-    "agg_cube",
-    "window_topk_per_group",
-    "join_asof_events",
-    "func_json",
-    "stream_session_windows",
-    "text_fingerprint_dedup",
-    "dedup_minhash_lsh",
-    "sim_cosine_topk",
-    "sim_ivf_topk",
-    "sim_ivf_query_only",
-    "sim_pq_topk",
-    "sim_ivfpq_topk",
-    "q8_market_share",
-    "q13_customer_distribution",
-    "q18_large_volume_customers",
-    "stats_regression",
-    "events_funnel",
-    "events_cohort_retention",
-    "dedup_winnow_pairs",
-    "curate_top_quality_per_lang",
-    "merge_upsert_latest_value",
-    "q9_product_profit",
-    "search_bm25",
-    "decontaminate_ngram_overlap",
-    "curate_funnel_report",
-    "text_pii_redact",
-    "curate_source_blocklist",
-    "sample_train_valid_test",
-    "dedup_connected_clusters",
-    "graph_pagerank_centrality",
-    "dedup_keep_best_canonical",
-    "curate_token_budget_per_source",
-    "text_segment_dedup",
-    "sample_weighted_priority",
-    "dedup_semantic_embeddings",
-    "text_subword_tokenize",
-    "stream_join_click_view",
-    "decontaminate_semantic",
-    "diag_table_profile",
-    "report_cross_source_dup_rates",
-    "sim_lsh_near_pairs",
-    "sim_pq_query_only",
-    "sim_ivfpq_query_only",
-    "text_unigram_logprob_quality",
-    "stream_dedup_events",
-    "dedup_incremental_minhash",
-    "dedup_incremental_semantic",
-    "dedup_incremental_simhash",
-    "decontaminate_bloom",
-    "decontaminate_incremental_bloom",
-    "search_hybrid_rrf",
-    "text_gopher_rules",
-    "tokenizer_bpe_learn",
-    "events_cms_type_counts",
-    "text_char_entropy",
-    "curate_funnel_v2",
-    "text_repeated_span_fraction",
-    "join_temporal_scd2",
-    "link_entity_resolution",
-    "graph_bfs_hops",
-    "search_bm25_query_only",
-    "mv_incremental_refresh",
-    "text_top_keywords",
-    "diag_join_cardinality_cms",
-    "multimodal_audio_features",
-    "graph_personalized_pagerank",
-    "basket_part_affinity",
-    "join_salted_skew",
-    "graph_incremental_components",
-    "curate_temperature_mixture",
-    "sim_hard_negatives",
-    "layout_range_partition_bounds",
-    "report_corpus_delta",
-    "multimodal_phash_dedup",
-    "multimodal_phash_near_dup",
-    "report_embedding_drift",
-    "sample_uniform_per_stratum",
-    "graph_kcore_boilerplate",
-    "text_collocations_pmi",
-    "join_asof_union_sort",
-    "join_asof_forward",
-    "stream_join_view_no_click",
-    "text_ngram_novelty",
-    "report_source_vocab_overlap",
-    "privacy_erasure_cascade",
-    "events_late_arrival_profile",
-    "agg_bitmap_exact_distinct",
-    "func_sql_udf",
-    "mv_incremental_distinct_refresh",
-    "text_quality_classifier",
-    "multimodal_jpeg_phash",
-    "merge_acid_upsert",
-    "text_html_extract",
-    "dedup_index_erasure",
-    "graph_components_star",
-    "sim_ann_tuning_report",
-    "curate_classifier_budget",
-    "events_sequence_pattern",
-    "layout_zorder_values",
-    "agg_bitmap_set_algebra",
-    "join_bloom_semi_reduction",
-    "skyline_pareto_parts",
-    "dedup_containment_pairs",
-    "events_ewma_daily",
-    "join_bucketed_colocated",
-    "privacy_dp_noisy_counts",
-    "curate_curriculum_schedule",
-    "txn_change_data_feed",
-    "stats_theilsen_trend",
-    "events_attribution_removal",
-    "sample_kcenter_coreset",
-    "agg_weighted_median",
-    "layout_dynamic_partition_pruning",
-    "graph_sssp_weighted",
-    "udtf_table_arg_gaps",
-    "dq_quarantine_split",
-    "text_unicode_normalize",
-    "link_edit_distance_join",
-    "dq_referential_integrity",
-    "link_fellegi_sunter_scores",
-    "embed_matryoshka_report",
-    "link_sorted_neighborhood",
-    "window_sliding_distinct_users",
-    "events_markov_next_accuracy",
-    "curate_classifier_calibration",
-    "events_ab_test_report",
-    "events_cohort_ltv",
-    "events_daily_percentile_bands",
-    "text_readability_scores",
-    "events_funnel_step_timing",
-    # round 10: the previously non-gated heavy queries (VERDICT r9 #1)
-    "graph_label_propagation",
-    "graph_triangle_count",
-    "sim_lsh_ann_topk",
-    "sim_tfidf_cosine_pairs",
-    "dedup_jaccard_trigram",
-    "dedup_simhash_pairs",
-    "events_sessionize_stats",
-    "search_phrase_positions",
-    "window_cumulative_distinct_users",
-    "sim_cosine_near_pairs",
-    "udaf_grouped_trimmed_mean",
-    "sample_split_leakage_safe",
-    "curate_sequence_packing",
-    "report_tokenizer_oov",
-    "udaf_window_trailing_trimmed",
-    "func_collation_group",
-    # round-11 promotions (full-registry sweep, VERDICT item 4)
-    "recursive_month_spine",
-    "dedup_sketch_guarantees",
-    "sim_ann_recall_guarantees",
-    "text_lang_detect",
-    "report_lang_confusion_by_source",
-    "text_span_removal",
-    "curate_end_to_end",
-    "agg_approx_distinct",
-    "text_repetition_stats",
-    "tokenizer_bpe_apply",
-    "stream_cdf_feed",
-    "stream_cdf_replica",
-    "embed_int8_quantize",
-    "q21_waiting_orders",
-    "multimodal_audio_near_dup",
-    "tokenizer_unigram_heldout",
-    # round-12: full-registry gate — every registered query is now
-    # gated and benched (VERDICT r11 item 6)
-    "agg_bitwise",
-    "agg_collect_sorted",
-    "agg_conditional",
-    "agg_decimal_exact",
-    "agg_distinct",
-    "agg_grouping_sets",
-    "agg_having_large_orders",
-    "agg_hll_mergeable",
-    "agg_min_max_by",
-    "agg_mode_median",
-    "agg_percentile",
-    "agg_quantile_histogram",
-    "agg_rollup",
-    "agg_stats",
-    "agg_string_sorted",
-    "cdc_apply_changelog",
-    "chunk_token_windows",
-    "curate_image_caption_rules",
-    "curate_mix_ratios",
-    "curate_top_quality_approx",
-    "dedup_exact_distinct",
-    "dedup_incremental_batch",
-    "diag_key_skew",
-    "dq_benford_first_digit",
-    "dq_dynamic_rules",
-    "embed_label_centroids",
-    "embed_projection_distortion_check",
-    "embed_random_projection",
-    "events_anomaly_zscore",
-    "events_attribution_touch",
-    "events_dow_seasonal_residuals",
-    "events_gap_report",
-    "events_heavy_hitter_types",
-    "events_impute_missing",
-    "events_markov_transitions",
-    "events_resample_interpolate",
-    "events_resample_locf",
-    "events_rfm_segments",
-    "events_winsorize_by_type",
-    "filter_predicates",
-    "func_arrays",
-    "func_conditional",
-    "func_date_parse_roundtrip",
-    "func_dates",
-    "func_edit_distance",
-    "func_explode_tokens",
-    "func_map_from_json",
-    "func_math",
-    "func_regexp",
-    "func_strings",
-    "func_struct_access",
-    "func_timestamps",
-    "func_try_arithmetic",
-    "func_url_parse",
-    "func_variant_json",
-    "join_full_outer",
-    "join_inner_equi",
-    "join_left_anti",
-    "join_left_outer",
-    "join_left_semi",
-    "join_nullsafe",
-    "join_range_events",
-    "join_theta_pairs",
-    "lateral_top_orders_per_customer",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_real_decode",
-    "multimodal_video_frames",
-    "pack_token_bins",
-    "pipe_syntax_revenue",
-    "pivot_status_by_priority",
-    "privacy_k_anonymity",
-    "privacy_l_diversity",
-    "privacy_pseudonymize_join",
-    "projection_cast",
-    "q11_important_stock",
-    "q12_shipping_modes",
-    "q14_promo_revenue_ratio",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q17_small_quantity_revenue",
-    "q19_disjunctive_predicates",
-    "q20_excess_stock_suppliers",
-    "q22_dormant_rich_customers",
-    "q2_min_cost_supplier",
-    "q4_order_priority",
-    "q7_nation_volume",
-    "report_psi_value_drift",
-    "report_source_kl_divergence",
-    "sales_monthly_yoy",
-    "sample_hash_deterministic",
-    "sample_quantile_bins",
-    "sample_stratified_by_lang",
-    "sample_temporal_holdout",
-    "scd2_event_type_intervals",
-    "setop_except",
-    "setop_except_all",
-    "setop_intersect",
-    "setop_intersect_all",
-    "setop_union_all",
-    "setop_union_by_name",
-    "sort_limit_global",
-    "stats_chi2_categorical_drift",
-    "stats_corr_covar",
-    "stats_ks_drift",
-    "stats_mad_outliers",
-    "stats_moments",
-    "stats_pmi_event_pairs",
-    "stats_price_histogram",
-    "stream_enrich_dim",
-    "stream_sliding_counts",
-    "stream_tumbling_counts",
-    "subq_exists_late_lineitem",
-    "subq_scalar_below_avg_qty",
-    "text_quality_scores",
-    "text_token_stats",
-    "text_unigram_logprob",
-    "tokenizer_unigram_apply",
-    "tokenizer_unigram_learn",
-    "txn_schema_evolution",
-    "udf_grouped_zscore",
-    "udf_scalar_pandas",
-    "udtf_token_positions",
-    "unpivot_price_components",
-    "window_first_last",
-    "window_lag_lead",
-    "window_moving_avg",
-    "window_ntile_cume",
-    "window_range_numeric",
-    "window_rank_dense",
-    "window_running_sum",
-    # round-12 additions (second wave)
-    "text_bigram_lm_quality",
-    "curate_dsir_importance",
-    "tokenizer_wordpiece_learn",
-    "tokenizer_wordpiece_apply",
-    "privacy_t_closeness",
-    "events_cusum_changepoint",
-    "curate_span_corruption",
-    "sim_bitext_margin_pairs",
-    "tokenizer_wordpiece_heldout",
-    "search_ndcg_report",
-    "mv_incremental_join_refresh",
-    "mv_retractable_refresh",
-    "stats_poisson_bootstrap_ci",
-    # round-13 additions
-    "txn_delete_vectors",
-    "txn_cluster_zorder",
-    "tokenizer_incremental_refresh",
-    "search_rerank_linear",
-    "tokenizer_incremental_wordpiece",
-    "txn_restore_undo",
-    # round-14 additions
-    "tokenizer_bytebpe_learn",
-    "tokenizer_bytebpe_apply",
-    "tokenizer_incremental_bytebpe",
-    "txn_merge_full_sync",
-    "txn_null_skipping",
-    "txn_hidden_partition",
-    "tokenizer_bytebpe_heldout",
-    "txn_bloom_pointlookup",
-    "txn_metadata_count",
-    "txn_partition_evolution",
-    "txn_metadata_minmax",
-    "txn_truncate_transform",
-]
-
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -384,8 +42,7 @@ def main() -> None:
         "sim_ivfpq_query_only",
         "search_bm25_query_only",
     ):
-        if warm in HEADLINE and warm in QUERIES:
-            QUERIES[warm].fn(spark, sf_dir).count()
+        QUERIES[warm].fn(spark, sf_dir).count()
 
     # Compile pass: run every headline plan once at sf0.001 (~1k rows) so
     # whole-stage codegen, broadcast machinery, and the Arrow worker pool for
@@ -400,17 +57,16 @@ def main() -> None:
     from aws_genaric_datapipeline_spark.tables import compile_sf_dir
 
     compile_dir = compile_sf_dir(sf_dir)
-    for name in HEADLINE:
-        if name in QUERIES:
-            try:
-                QUERIES[name].fn(spark, compile_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception as exc:
-                print(
-                    f"warning: compile pass failed for {name}: {exc}",
-                    file=sys.stderr,
-                )
+    for name in QUERIES:
+        try:
+            QUERIES[name].fn(spark, compile_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        except Exception as exc:
+            print(
+                f"warning: compile pass failed for {name}: {exc}",
+                file=sys.stderr,
+            )
     spark.catalog.clearCache()
 
     # Best-of-2: two full timed sweeps, per-query minimum.  Single-shot
@@ -419,9 +75,7 @@ def main() -> None:
     # runs); the min of two sweeps is the reproducible steady-state cost.
     timings: dict[str, float] = {}
     for _sweep in range(2):
-        for name in HEADLINE:
-            if name not in QUERIES:
-                continue
+        for name in QUERIES:
             fn = QUERIES[name].fn
             start = time.perf_counter()
             df = fn(spark, sf_dir)

@@ -5,6 +5,8 @@ invisibility, and vacuum."""
 
 from __future__ import annotations
 
+import json
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -547,13 +549,115 @@ class TestSchemaInCommitMetadata:
         table.append(_df(spark, [(2, "b")]))
         table.append(_df(spark, [(3, "c")]))
         expire_snapshots(table, keep_last=2)
-        fsch = table._file_write_schemas(table._commits())
-        live = table.live_files()
-        assert set(live) <= set(fsch), "checkpoint must carry __schema__"
+        snap = table.snapshot()
+        assert all(
+            "__schema__" in snap.stats.get(f, {}) for f in snap.files
+        ), "checkpoint must carry __schema__"
         assert _rows(table.read()) == {(1, "a"), (2, "b"), (3, "c")}
+
+    def test_int_then_bigint_reads_widened(self, spark, table):
+        """Appends that disagree on a numeric column type read back as
+        the widened type — read, merge and rename all plan from the
+        log-resolved schema."""
+        table.append(spark.createDataFrame([(1, "a")], "k int, v string"))
+        table.append(spark.createDataFrame([(2, "b")], "k bigint, v string"))
+        out = table.read()
+        assert dict(out.dtypes)["k"] == "bigint"
+        assert _rows(out) == {(1, "a"), (2, "b")}
+        table.merge_upsert(_df(spark, [(2, "B")]), keys=["k"])
+        table.rename_column("v", "w")
+        assert {(r["k"], r["w"]) for r in table.read().collect()} == {
+            (1, "a"),
+            (2, "B"),
+        }
+
+    def test_bigint_then_double_reads_as_double(self, spark, table):
+        """The parquet reader cannot read a bigint file as double: each
+        recorded schema scans on its own and casts to the wider type."""
+        table.append(_df(spark, [(1, "a")]))
+        table.append(spark.createDataFrame([(2.5, "b")], "k double, v string"))
+        out = table.read()
+        assert dict(out.dtypes)["k"] == "double"
+        assert _rows(out) == {(1.0, "a"), (2.5, "b")}
+
+    def test_incompatible_types_raise_before_any_job(self, spark, table):
+        from aws_genaric_datapipeline_spark.sources.readers import (
+            SchemaMismatchError,
+        )
+
+        table.append(spark.createDataFrame([("x", "a")], "k string, v string"))
+        table.append(spark.createDataFrame([(2, "b")], "k int, v string"))
+        sc = spark.sparkContext
+        sc.setJobGroup("txn-schema-mismatch", "txn-schema-mismatch")
+        try:
+            with pytest.raises(
+                SchemaMismatchError, match="'k'.*(string vs int|int vs string)"
+            ):
+                table.read()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert not sc.statusTracker().getJobIdsForGroup("txn-schema-mismatch")
+
+    def test_live_file_without_schema_record_raises(self, spark, table):
+        """The log is the only schema source: a live file whose commit
+        lacks ``__schema__`` is an error naming the file, never a
+        footer fallback."""
+        table.append(_df(spark, [(1, "a")]))
+        log = table._log_path(1)
+        commit = json.loads(log.read_text())
+        for st in commit["stats"].values():
+            del st["__schema__"]
+        log.write_text(json.dumps(commit))
+        with pytest.raises(ValueError, match=commit["adds"][0]):
+            table.read()
 
 
 class TestSnapshotExpiry:
+    def test_checkpoint_is_the_snapshot(self, spark, table):
+        """One table carrying every kind of log state — a rename, a drop,
+        a DV delete, a constraint, a bloom declaration and two partition
+        transforms: every retained version's snapshot is identical
+        before and after expiry, because the checkpoint IS the
+        serialized snapshot."""
+        from aws_genaric_datapipeline_spark.pipeline.txn import (
+            append_clustered,
+            expire_snapshots,
+            set_bloom_filter,
+            set_partition_transform,
+        )
+
+        table.append(
+            spark.createDataFrame(
+                [(1, "a", "x"), (2, "b", "y")], "k bigint, v string, w string"
+            )
+        )
+        set_partition_transform(table, "truncate", "k", n=10)
+        set_partition_transform(table, "bucket", "k", n=4)
+        append_clustered(
+            table,
+            spark.createDataFrame([(11, "c", "z")], "k bigint, v string, w string"),
+            num_files=1,
+        )
+        set_bloom_filter(table, "k", num_bits=64, k=2)
+        table.set_constraint("k_pos", "k > 0")
+        table.rename_column("v", "vv")
+        table.drop_column("w")
+        table.delete_keys_dv(spark.createDataFrame([(1,)], "k bigint"), ["k"])
+        table.append(spark.createDataFrame([(3, "d")], "k bigint, vv string"))
+        latest = table.latest_version()
+        before = {v: table.snapshot(v) for v in (latest - 1, latest)}
+        def rows():
+            return {(r["k"], r["vv"]) for r in table.read().collect()}
+
+        want = rows()
+        assert before[latest].dvs and before[latest].schemas
+        assert expire_snapshots(table, keep_last=2)
+        assert {v: table.snapshot(v) for v in before} == before
+        assert rows() == want == {(2, "b"), (11, "c"), (3, "d")}
+        with pytest.raises(ValueError, match="expired"):
+            table.snapshot(latest - 2)
+
     def _build(self, spark, table):
         # v1..v4: two appends, an overwrite, another append
         table.append(_df(spark, [(1, "a")]))
@@ -1120,14 +1224,11 @@ class TestTxnEvolution:
         assert got == {(8, "h"), (9, "i")}
         # white-box: the logical key resolves to the old physical name for
         # pre-rename files, so their committed [min,max] stats still prune
-        commits = table._commits()
-        schemas = table._schema_commits(commits=commits)
-        addv = table._file_add_versions(commits)
-        stats = table.file_stats(commits)
-        v1_files = [f for f, v in addv.items() if v == 1]
-        assert all(
-            table._stats_physical_name("key", f, schemas, addv) == "k"
-            for f in v1_files
+        snap = table.snapshot()
+        stats = snap.stats
+        v1_files = [f for f, v in snap.add_versions.items() if v == 1]
+        assert v1_files and all(
+            snap.stat(f, "key") == stats[f].get("k") for f in v1_files
         )
         # at least one v1 part file carries k-stats, and they are keyed
         # under the PHYSICAL name (empty part files carry none)
