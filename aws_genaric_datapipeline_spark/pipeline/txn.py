@@ -28,10 +28,22 @@ Delta-Lake-shaped, deliberately small:
   plan a read.  Additive columns union; numeric type drift across
   appends widens (``sources.readers._widen``); anything else raises
   ``SchemaMismatchError`` before a job runs.
-- Commit publication is ``os.open(..., O_CREAT | O_EXCL)`` of the next
-  version file: exactly one of two racing writers wins the version; the
-  loser re-reads the log and either RETRIES (disjoint files) or raises
-  ``TxnConflict`` (overlapping reads — the optimistic concurrency rule).
+- THE commit protocol is one step, ``TxnTable._commit``, that every
+  write goes through.  A write pins a ``Snapshot`` and stages its new
+  data and deletion-vector files (invisible until a commit names them).
+  The step validates the staged data files against that snapshot's
+  CHECK constraints, the ones in force at the version it publishes
+  over, then publishes ``version + 1`` with ``os.open(..., O_CREAT |
+  O_EXCL)``: exactly one of two racing writers wins a version.  On a
+  loss, or a ``ConstraintViolation``, it unlinks every staged file, and
+  a loss raises ``TxnConflict`` naming the op and its base version (the
+  optimistic concurrency rule: the loser's reads may be stale).  Blind
+  writers (append, overwrite, rename/drop column) read nothing the
+  winner could invalidate, so they re-pin the latest snapshot and retry
+  instead; they unlink and raise once, after the last attempt.  An
+  ``app_txn_id`` already in the log makes a write a replay: it returns
+  before any Spark job runs, and a blind writer that finds its
+  re-delivered twin committed between attempts returns the same way.
 - Orphan data files (a writer that crashed after writing parquet but
   before committing) are INVISIBLE: readers load only files the log
   names.  ``vacuum()`` deletes them.
@@ -71,6 +83,10 @@ from aws_genaric_datapipeline_spark.sources.readers import (
 
 class TxnConflict(RuntimeError):
     """A concurrent commit invalidated this transaction's snapshot."""
+
+
+# how a TxnConflict names the ops whose commit-log op name reads poorly
+_CONFLICT_LABELS = {"delete_dv": "DV delete", "merge_full_sync": "full-sync merge"}
 
 
 def _stat_bound(stat_val, bound):
@@ -167,7 +183,7 @@ def _bloom_key(v) -> str | None:
     sides (pyarrow ``to_pylist`` objects at write, user literals at
     probe), so int32-vs-int64 or probe-literal-type mismatches can never
     split the hash the way a raw-bytes hash would (the xxhash64
-    type-sensitivity class `_transform_literals` had to fix).  Floats,
+    type-sensitivity class `_transform_bounds` handles).  Floats,
     decimals and timestamps are UNSUPPORTED by design: float point
     lookups are ill-posed, and timestamp str() spellings differ between
     tz-aware and naive objects — a mismatch there would silently skip a
@@ -716,14 +732,13 @@ class TxnTable:
         ]
 
     # ------------------------------------------------- schema evolution
-    def _current_fields(self) -> list[dict]:
-        """Registered fields at the latest version, refreshed with ids
-        for any columns present in the current snapshot but not yet
-        registered (bootstraps identity ids on the first schema change;
-        later, folds additively-evolved columns into the registry).  The
-        snapshot's columns come from the log alone
-        (``Snapshot.scan_plan``)."""
-        snap = self.snapshot()
+    @staticmethod
+    def _current_fields(snap: Snapshot) -> list[dict]:
+        """Registered fields at ``snap``, refreshed with ids for any
+        columns present in the snapshot but not yet registered
+        (bootstraps identity ids on the first schema change; later, folds
+        additively-evolved columns into the registry).  The snapshot's
+        columns come from the log alone (``Snapshot.scan_plan``)."""
         fields = [dict(f) for f in snap.fields]
         max_id = max(
             (
@@ -746,21 +761,16 @@ class TxnTable:
         """Commit a schema change: ``mutate(fields)`` edits the refreshed
         field list in place (rename/drop).  Fields are recomputed per
         retry so a lost version race re-validates against the winner."""
-        for _ in range(max_retries):
-            pre = self._current_fields()
+
+        def _plan(snap: Snapshot) -> tuple[list, dict]:
+            pre = self._current_fields(snap)
             fields = [dict(f) for f in pre]
             mutate(fields)
-            v = self.latest_version() + 1
-            if self._try_commit(
-                v,
-                op,
-                [],
-                [],
-                None,
-                extra={"schema": {"fields": fields, "pre_fields": pre}},
-            ):
-                return v
-        raise TxnConflict(f"{op} lost {max_retries} version races")
+            return [], {"schema": {"fields": fields, "pre_fields": pre}}
+
+        return self._commit(
+            self.snapshot(), op, retries=max_retries, rebase=_plan
+        )
 
     def rename_column(self, old: str, new: str, max_retries: int = 10) -> int:
         """Rename a column by FIELD ID (Iceberg semantics): a metadata-only
@@ -1055,6 +1065,11 @@ class TxnTable:
             c.get("app_txn_id") == app_txn_id for c in self.commits_iter()
         )
 
+    def _replayed(self, app_txn_id: str | None) -> bool:
+        """True when ``app_txn_id`` already committed: the write is a
+        re-delivery and returns before running any Spark job."""
+        return app_txn_id is not None and self.is_committed(app_txn_id)
+
     # ------------------------------------------------------- constraints
     def constraints(self, version: int | None = None) -> dict[str, str]:
         """name -> CHECK predicate SQL in force at ``version`` (Delta's
@@ -1065,7 +1080,8 @@ class TxnTable:
     @staticmethod
     def _satisfies(predicate_sql: str):
         """THE constraint-satisfaction rule, used identically by
-        set_constraint, _validate_adds, and restore_version: a row
+        set_constraint, _validate_adds, and restore_version (and by
+        merge_full_sync for its delete condition): a row
         satisfies a CHECK iff the predicate is literally TRUE — a NULL
         result counts as a violation (conservative quality-gate
         semantics, stricter than SQL/Delta's NULL-satisfies; one rule
@@ -1095,66 +1111,45 @@ class TxnTable:
                 f"existing snapshot has {bad} rows violating {name!r}: "
                 f"{predicate_sql}"
             )
-        v = snap.version + 1
-        if not self._try_commit(
-            v,
+        return self._commit(
+            snap,
             "set_constraint",
-            [],
-            [],
-            None,
             extra={"constraint": {"name": name, "sql": predicate_sql}},
-        ):
-            raise TxnConflict(f"set_constraint {name!r} lost a version race")
-        return v
+        )
 
     def drop_constraint(self, name: str) -> int:
-        v = self.latest_version() + 1
-        if not self._try_commit(
-            v,
+        return self._commit(
+            self.snapshot(),
             "drop_constraint",
-            [],
-            [],
-            None,
             extra={"constraint": {"name": name, "sql": None}},
-        ):
-            raise TxnConflict(f"drop_constraint {name!r} lost a version race")
-        return v
+        )
 
-    def _validate_adds(self, adds: dict[str, dict]) -> dict[str, str]:
+    def _validate_adds(
+        self, adds: dict[str, dict], live: dict[str, str]
+    ) -> None:
         """Validate freshly WRITTEN (still-invisible) staged files against
-        the live CHECK constraints, by reading the parquet back — never by
-        re-evaluating the batch DAG.  Re-evaluation would be both unsound
-        (a nondeterministic batch could pass the validating evaluation and
-        then write DIFFERENT rows) and wasteful (the upstream DAG computes
-        twice).  Reading back costs one scan of the batch-sized staged
-        files.  NULL predicate results count as violations (the shared
-        _satisfies rule).  On violation the staged files are unlinked and
-        ConstraintViolation raises: nothing was ever visible.  Returns the
-        constraint set validated against, so commit-retry loops can detect
-        a concurrent set_constraint and re-validate (see append).
-        ``adds`` is the name -> stats map ``_write_files`` returned: every
-        staged file of one write shares its recorded schema, so the
-        read-back opens no footer."""
-        live = self.constraints()
+        the CHECK constraints ``live``, by reading the parquet back — never
+        by re-evaluating the batch DAG.  Re-evaluation would be both
+        unsound (a nondeterministic batch could pass the validating
+        evaluation and then write DIFFERENT rows) and wasteful (the
+        upstream DAG computes twice).  Reading back costs one scan of the
+        batch-sized staged files.  NULL predicate results count as
+        violations (the shared _satisfies rule).  ``adds`` is the name ->
+        stats map ``_write_files`` returned: every staged file of one
+        write shares its recorded schema, so the read-back opens no
+        footer."""
         if not live or not adds:
-            return live
+            return
         rec = next(iter(adds.values()))["__schema__"]
         df = self.spark.read.schema(_struct_from_rec(rec)).parquet(
             *[str(self.path / self.DATA_DIR / f) for f in adds]
         )
-        self._raise_violations(df, live, cleanup=list(adds))
-        return live
+        self._raise_violations(df, live)
 
-    def _raise_violations(
-        self,
-        df: DataFrame,
-        live: dict[str, str],
-        cleanup: list[str] | None = None,
-    ) -> None:
+    def _raise_violations(self, df: DataFrame, live: dict[str, str]) -> None:
         """One-pass violation count of ``df`` against every constraint in
-        ``live`` (single aggregate action, no per-constraint scans); on
-        the first violating constraint, unlink ``cleanup`` staged files
-        and raise ConstraintViolation."""
+        ``live`` (single aggregate action, no per-constraint scans); the
+        first violating constraint raises ConstraintViolation."""
         conds = [self._satisfies(sql) for sql in live.values()]
         row = df.select(
             *[
@@ -1164,8 +1159,6 @@ class TxnTable:
         ).collect()[0]
         for i, (n, sql) in enumerate(live.items()):
             if row[f"__bad_{i}"]:
-                for name in cleanup or []:
-                    (self.path / self.DATA_DIR / name).unlink(missing_ok=True)
                 raise ConstraintViolation(
                     f"write batch has {row[f'__bad_{i}']} rows violating "
                     f"{n!r}: {sql}"
@@ -1252,47 +1245,108 @@ class TxnTable:
             fh.write(payload)
         return True
 
+    def _commit(
+        self, snap: Snapshot, op: str, adds=(), removes=(),
+        app_txn_id: str | None = None, extra: dict | None = None, *,
+        staged: bool = True, retries: int = 1, rebase=None,
+    ) -> int:
+        """THE commit step (see the module docstring): publish ``op`` over
+        the pinned ``snap`` as version ``snap.version + 1`` and return
+        that version.  ``adds`` is the name -> stats map ``_write_files``
+        returned, ``removes`` the files the commit retires, and ``extra``
+        more commit metadata whose ``dv_files`` this write staged too.
+
+        Staged data files are validated against ``snap.constraints``.  On
+        any failure every staged file is unlinked; a lost race raises
+        TxnConflict.  ``staged=False`` hands files earlier commits own
+        (restore): they are neither validated nor unlinked.
+
+        ``retries`` > 1 makes a blind writer: a lost race re-pins the
+        latest snapshot, returns its version if ``app_txn_id`` landed
+        meanwhile, and tries again.  ``rebase(snap)`` -> ``(removes,
+        extra)`` re-plans the commit against each pinned snapshot."""
+        files = [*adds, *(extra or {}).get("dv_files", [])] if staged else []
+        checked = None
+        try:
+            for attempt in range(retries):
+                if attempt:
+                    snap = self.snapshot()
+                    if self._replayed(app_txn_id):
+                        return snap.version
+                if rebase is not None:
+                    removes, extra = rebase(snap)
+                if staged and snap.constraints != checked:
+                    self._validate_adds(adds, snap.constraints)
+                    checked = snap.constraints
+                if self._try_commit(
+                    snap.version + 1, op, adds, list(removes), app_txn_id, extra
+                ):
+                    files = []  # published: the log owns them now
+                    return snap.version + 1
+        finally:
+            for name in files:
+                (self.path / self.DATA_DIR / name).unlink(missing_ok=True)
+        raise TxnConflict(
+            f"{_CONFLICT_LABELS.get(op, op)} based on version {snap.version} "
+            f"lost to a concurrent commit (now {self.latest_version()}); "
+            f"re-read and retry"
+        )
+
+    def _stage_dv(self, snap: Snapshot, matched: DataFrame) -> dict:
+        """Stage ONE deletion-vector file for the rows of ``matched`` (a
+        ``with_positions`` read of ``snap`` filtered to the rows to
+        delete), unioned with the prior vectors of the files it touches
+        so their earlier deletes survive the mapping replacement (the
+        prior vector files stay referenced by older commits for time
+        travel).  DVs are small by construction — deleted positions, not
+        data — so every touched file maps to the one coalesced file.
+        Returns the commit's {"dv_updates", "dv_files"}, or {} when
+        nothing matched."""
+        hits = matched.select(
+            F.col("__file").alias("file"), F.col("__pos").alias("pos")
+        )
+        touched = sorted(
+            r["file"] for r in hits.select("file").distinct().collect()
+        )
+        if not touched:
+            return {}
+        prior = [snap.dvs[f] for f in touched if f in snap.dvs]
+        if prior:
+            hits = hits.unionByName(
+                self._dv_rows(prior).where(F.col("file").isin(touched))
+            ).distinct()
+        dv_files = list(self._write_files(hits.coalesce(1), snap))
+        return {
+            "dv_updates": {f: dv_files[0] for f in touched},
+            "dv_files": dv_files,
+        }
+
     def append(
         self, df: DataFrame, app_txn_id: str | None = None, max_retries: int = 10
     ) -> int:
         """Blind append: never conflicts, retries version races.
         ``app_txn_id`` makes re-delivery a no-op (exactly-once sink)."""
-        if app_txn_id is not None and self.is_committed(app_txn_id):
-            return self.latest_version()
-        adds = self._write_files(df)
-        validated = self._validate_adds(adds)
-        for _ in range(max_retries):
-            v = self.latest_version() + 1
-            if app_txn_id is not None and self.is_committed(app_txn_id):
-                # lost a race to a re-delivered twin of ourselves
-                for name in adds:
-                    (self.path / self.DATA_DIR / name).unlink(missing_ok=True)
-                return self.latest_version()
-            # a concurrent set_constraint between validation and the
-            # winning commit must still gate this batch: re-validate
-            # whenever the live set drifted from the one we checked
-            if self.constraints() != validated:
-                validated = self._validate_adds(adds)
-            if self._try_commit(v, "append", adds, [], app_txn_id):
-                return v
-        raise TxnConflict(f"append lost {max_retries} version races")
+        return self._write_blind(df, "append", app_txn_id, max_retries)
 
     def overwrite(
         self, df: DataFrame, app_txn_id: str | None = None, max_retries: int = 10
     ) -> int:
         """Replace the table contents atomically."""
-        if app_txn_id is not None and self.is_committed(app_txn_id):
+        return self._write_blind(
+            df, "overwrite", app_txn_id, max_retries, lambda s: (s.files, None)
+        )
+
+    def _write_blind(
+        self, df: DataFrame, op: str, app_txn_id, retries: int, rebase=None
+    ) -> int:
+        """Stage ``df`` and commit it as a blind writer (see _commit)."""
+        if self._replayed(app_txn_id):
             return self.latest_version()
-        adds = self._write_files(df)
-        validated = self._validate_adds(adds)
-        for _ in range(max_retries):
-            v = self.latest_version() + 1
-            removes = self.live_files(v - 1)
-            if self.constraints() != validated:
-                validated = self._validate_adds(adds)
-            if self._try_commit(v, "overwrite", adds, removes, app_txn_id):
-                return v
-        raise TxnConflict(f"overwrite lost {max_retries} version races")
+        snap = self.snapshot()
+        adds = self._write_files(df, snap)
+        return self._commit(
+            snap, op, adds, app_txn_id=app_txn_id, retries=retries, rebase=rebase
+        )
 
     def merge_upsert(
         self,
@@ -1308,30 +1362,20 @@ class TxnTable:
         concurrent writer's rows (rewrite-all-files merge => any
         concurrent change conflicts; a file-pruned merge would narrow
         this to overlapping files)."""
-        if app_txn_id is not None and self.is_committed(app_txn_id):
+        if self._replayed(app_txn_id):
             return self.latest_version()
         snap = self.snapshot()
-        base_version, base_files = snap.version, list(snap.files)
-        if base_files:
-            base = self._read_resolved(snap, base_files)
+        merged = updates
+        if snap.files:
             merged = (
-                base.join(updates.select(*keys), keys, "left_anti")
+                self._read_resolved(snap, snap.files)
+                .join(updates.select(*keys), keys, "left_anti")
                 .unionByName(updates)
             )
-        else:
-            merged = updates
-        adds = self._write_files(merged, snap)
-        self._validate_adds(adds)
-        if not self._try_commit(
-            base_version + 1, "merge", adds, base_files, app_txn_id
-        ):
-            for name in adds:
-                (self.path / self.DATA_DIR / name).unlink(missing_ok=True)
-            raise TxnConflict(
-                f"merge based on version {base_version} lost to a concurrent "
-                f"commit (now {self.latest_version()}); re-read and retry"
-            )
-        return base_version + 1
+        return self._commit(
+            snap, "merge", self._write_files(merged, snap), snap.files,
+            app_txn_id,
+        )
 
     def delete_keys(
         self,
@@ -1346,28 +1390,19 @@ class TxnTable:
         resurrecting or losing rows; retry via merge_upsert_with_retry's
         pattern (re-call re-reads the new snapshot).  ``app_txn_id``
         makes re-delivery a no-op (exactly-once CDC apply)."""
-        if app_txn_id is not None and self.is_committed(app_txn_id):
+        if self._replayed(app_txn_id):
             return self.latest_version()
         snap = self.snapshot()
-        base_version, base_files = snap.version, list(snap.files)
-        if not base_files:
+        if not snap.files:
             # deleting from an empty table: nothing to rewrite, no commit
-            return base_version
-        remaining = self._read_resolved(snap, base_files).join(
+            return snap.version
+        remaining = self._read_resolved(snap, snap.files).join(
             keys_df.select(*keys), keys, "left_anti"
         )
-        adds = self._write_files(remaining, snap)
-        if not self._try_commit(
-            base_version + 1, "delete", adds, base_files, app_txn_id
-        ):
-            for name in adds:
-                (self.path / self.DATA_DIR / name).unlink(missing_ok=True)
-            raise TxnConflict(
-                f"delete based on version {base_version} lost to a "
-                f"concurrent commit (now {self.latest_version()}); re-read "
-                f"and retry"
-            )
-        return base_version + 1
+        return self._commit(
+            snap, "delete", self._write_files(remaining, snap), snap.files,
+            app_txn_id,
+        )
 
     def delete_keys_dv(
         self,
@@ -1397,56 +1432,24 @@ class TxnTable:
         one anti-join against the vector, which disappears entirely after
         the next compaction.  Delta Lake's deletion vectors and Iceberg
         v2 positional delete files are this exact design."""
-        if app_txn_id is not None and self.is_committed(app_txn_id):
+        if self._replayed(app_txn_id):
             return self.latest_version()
         snap = self.snapshot()
-        base_version, base_files, dvs = snap.version, snap.files, snap.dvs
-        if not base_files:
-            return base_version
-        with_pos = self._read_resolved(snap, base_files, with_positions=True)
-        hits = (
-            with_pos.join(keys_df.select(*keys), keys, "left_semi")
-            .select(
-                F.col("__file").alias("file"), F.col("__pos").alias("pos")
-            )
+        if not snap.files:
+            return snap.version
+        extra = self._stage_dv(
+            snap,
+            self._read_resolved(snap, snap.files, with_positions=True).join(
+                keys_df.select(*keys), keys, "left_semi"
+            ),
         )
-        touched = [
-            r["file"] for r in hits.select("file").distinct().collect()
-        ]
-        if not touched:
+        if not extra:
             # nothing matched: a content no-op commits nothing (and does
             # not consume the app_txn_id) — same rule as the empty table
-            return base_version
-        # union the prior vectors of re-deleted files so their earlier
-        # deletes survive the mapping replacement
-        prior = [dvs[f] for f in touched if f in dvs]
-        new_rows = hits
-        if prior:
-            new_rows = new_rows.unionByName(
-                self._dv_rows(prior).where(F.col("file").isin(touched))
-            ).distinct()
-        # one vector file per commit (DVs are small by construction —
-        # deleted positions, not data); every touched file maps to it
-        dv_adds = list(self._write_files(new_rows.coalesce(1), snap))
-        if not self._try_commit(
-            base_version + 1,
-            "delete_dv",
-            [],
-            [],
-            app_txn_id,
-            extra={
-                "dv_updates": {f: dv_adds[0] for f in sorted(touched)},
-                "dv_files": dv_adds,
-            },
-        ):
-            for name in dv_adds:
-                (self.path / self.DATA_DIR / name).unlink(missing_ok=True)
-            raise TxnConflict(
-                f"DV delete based on version {base_version} lost to a "
-                f"concurrent commit (now {self.latest_version()}); re-read "
-                f"and retry"
-            )
-        return base_version + 1
+            return snap.version
+        return self._commit(
+            snap, "delete_dv", app_txn_id=app_txn_id, extra=extra
+        )
 
     # ------------------------------------------------------------- maintain
     def vacuum(self) -> list[str]:
@@ -1547,46 +1550,41 @@ def compact(
     rewrite repartitions to ceil(total / target_rows) files.  Default
     remains a single file (test-scale tables); production picks
     target_rows so a file lands near the ~128 MB scan-friendly size."""
-    snap = table.snapshot()
-    base_version, base_files = snap.version, list(snap.files)
-    if not base_files:
-        return base_version
-    if app_txn_id is not None and table.is_committed(app_txn_id):
+    if table._replayed(app_txn_id):
         return table.latest_version()
-    data = table._read_resolved(snap, base_files)
+    snap = table.snapshot()
+    if not snap.files:
+        return snap.version
+    data = table._read_resolved(snap, snap.files)
     if target_rows:
-        total = sum(snap.stats[f]["__rows__"] for f in base_files)
+        total = sum(snap.stats[f]["__rows__"] for f in snap.files)
         data = data.repartition(max(1, -(-total // target_rows)))
     else:
         data = data.coalesce(1)
-    adds = table._write_files(data, snap)
-    if not table._try_commit(
-        base_version + 1, "compact", adds, base_files, app_txn_id
-    ):
-        for name in adds:
-            (table.path / table.DATA_DIR / name).unlink(missing_ok=True)
-        raise TxnConflict(
-            f"compact based on version {base_version} lost to a concurrent commit"
-        )
-    return base_version + 1
+    return table._commit(
+        snap, "compact", table._write_files(data, snap), snap.files, app_txn_id
+    )
 
 
-def _cluster_curve_expr(
+def _clustered(
     table: TxnTable,
     snap: Snapshot,
+    files,
     col_a: str,
     col_b: str,
     bits: int,
     curve: str,
-):
-    """The shared grid machinery of cluster_zorder / cluster_incremental:
+    num_files: int,
+) -> DataFrame:
+    """The shared rewrite of cluster_zorder / cluster_incremental:
     validate the curve, derive each column's global [lo, hi] from the
     committed per-file stats of ALL of ``snap``'s live files (driver-side,
     no data scan; one aggregate fallback when stats are missing), and
-    return the curve value expression over the uniform 2^bits
-    width_bucket cells.  Incremental clustering rewrites only the tail
-    but takes its bounds from the full snapshot here, so tail files land
-    on the same cell lattice as the clustered bulk."""
+    return ``files`` range-partitioned into ``num_files`` and sorted on
+    the curve value over the uniform 2^bits width_bucket cells.
+    Incremental clustering rewrites only the tail but takes its bounds
+    from the full snapshot here, so tail files land on the same cell
+    lattice as the clustered bulk."""
     from aws_genaric_datapipeline_spark.operators.layout import (
         hilbert_value,
         zorder_value,
@@ -1630,7 +1628,13 @@ def _cluster_curve_expr(
             F.greatest(F.least(wb, F.lit(n)), F.lit(1)) - 1
         ).cast("bigint")
 
-    return curve_fn(_cell(col_a), _cell(col_b), bits)
+    return (
+        table._read_resolved(snap, files)
+        .withColumn("__z", curve_fn(_cell(col_a), _cell(col_b), bits))
+        .repartitionByRange(num_files, "__z")
+        .sortWithinPartitions("__z")
+        .drop("__z")
+    )
 
 
 def cluster_zorder(
@@ -1669,30 +1673,18 @@ def cluster_zorder(
     """
     if curve not in ("zorder", "hilbert"):
         raise ValueError(f"unknown curve {curve!r}")
-    if app_txn_id is not None and table.is_committed(app_txn_id):
+    if table._replayed(app_txn_id):
         return table.latest_version()
     snap = table.snapshot()
-    base_version, base_files = snap.version, list(snap.files)
-    if not base_files:
-        return base_version
-    zcol = _cluster_curve_expr(table, snap, col_a, col_b, bits, curve)
-    clustered = (
-        table._read_resolved(snap, base_files)
-        .withColumn("__z", zcol)
-        .repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
+    if not snap.files:
+        return snap.version
+    clustered = _clustered(
+        table, snap, snap.files, col_a, col_b, bits, curve, num_files
     )
-    adds = table._write_files(clustered, snap)
-    if not table._try_commit(
-        base_version + 1, "cluster", adds, base_files, app_txn_id
-    ):
-        for name in adds:
-            (table.path / table.DATA_DIR / name).unlink(missing_ok=True)
-        raise TxnConflict(
-            f"cluster based on version {base_version} lost to a concurrent commit"
-        )
-    return base_version + 1
+    return table._commit(
+        snap, "cluster", table._write_files(clustered, snap), snap.files,
+        app_txn_id,
+    )
 
 
 def cluster_incremental(
@@ -1724,51 +1716,37 @@ def cluster_incremental(
     version = current latest when there is no tail (no-op, no commit)."""
     if curve not in ("zorder", "hilbert"):
         raise ValueError(f"unknown curve {curve!r}")
-    if app_txn_id is not None and table.is_committed(app_txn_id):
+    if table._replayed(app_txn_id):
         return {
             "version": table.latest_version(),
             "n_clustered": 0,
             "n_untouched": len(table.live_files()),
         }
     snap = table.snapshot()
-    base_version, base_files = snap.version, snap.files
     clustered_files = {
         f
         for c in table.commits_iter()
         if c["op"] in ("cluster", "cluster_incremental")
         for f in c["adds"]
     }
-    tail = [f for f in base_files if f not in clustered_files]
+    tail = [f for f in snap.files if f not in clustered_files]
     if not tail:
         return {
-            "version": base_version,
+            "version": snap.version,
             "n_clustered": 0,
-            "n_untouched": len(base_files),
+            "n_untouched": len(snap.files),
         }
     # same grid as cluster_zorder, over the FULL snapshot's bounds so the
     # tail lands on the same cell lattice as the clustered bulk
-    zcol = _cluster_curve_expr(table, snap, col_a, col_b, bits, curve)
-    rewritten = (
-        table._read_resolved(snap, tail)
-        .withColumn("__z", zcol)
-        .repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
+    rewritten = _clustered(
+        table, snap, tail, col_a, col_b, bits, curve, num_files
     )
     adds = table._write_files(rewritten, snap)
-    if not table._try_commit(
-        base_version + 1, "cluster_incremental", adds, tail, app_txn_id
-    ):
-        for name in adds:
-            (table.path / table.DATA_DIR / name).unlink(missing_ok=True)
-        raise TxnConflict(
-            f"incremental cluster based on version {base_version} lost to a "
-            f"concurrent commit"
-        )
+    v = table._commit(snap, "cluster_incremental", adds, tail, app_txn_id)
     return {
-        "version": base_version + 1,
+        "version": v,
         "n_clustered": len(tail),
-        "n_untouched": len(base_files) - len(tail),
+        "n_untouched": len(snap.files) - len(tail),
     }
 
 
@@ -1795,7 +1773,7 @@ def restore_version(
 
     Same OCC rule as every maintenance commit: a concurrent data commit
     wins and this raises TxnConflict."""
-    if app_txn_id is not None and table.is_committed(app_txn_id):
+    if table._replayed(app_txn_id):
         return table.latest_version()
     known = {c["version"] for c in table.commits_iter()}
     base_version = max(known, default=0)
@@ -1837,13 +1815,10 @@ def restore_version(
     if dv_updates:
         extra["dv_updates"] = dv_updates
         extra["dv_files"] = sorted(set(target.dvs.values()))
-    if not table._try_commit(
-        base_version + 1, "restore", adds, removes, app_txn_id, extra=extra
-    ):
-        raise TxnConflict(
-            f"restore to version {version} lost to a concurrent commit"
-        )
-    return base_version + 1
+    # re-added files belong to earlier commits: never validated or unlinked
+    return table._commit(
+        cur, "restore", adds, removes, app_txn_id, extra, staged=False
+    )
 
 
 def expire_snapshots(table: TxnTable, keep_last: int) -> list[int]:
@@ -2037,14 +2012,13 @@ def merge_upsert_pruned(
     detecting overlap-only conflicts is a straightforward refinement of
     the version check).
     """
-    if app_txn_id is not None and table.is_committed(app_txn_id):
+    if table._replayed(app_txn_id):
         return {
             "version": table.latest_version(),
             "n_touched": 0,
             "n_carried": len(table.live_files()),
         }
     snap = table.snapshot()
-    base_version, base_files = snap.version, list(snap.files)
     row = updates.agg(
         F.min(key).alias("lo"),
         F.max(key).alias("hi"),
@@ -2057,11 +2031,11 @@ def merge_upsert_pruned(
         # empty table is equally a no-op (no junk version 1, no consumed
         # app_txn_id) — the two paths must agree on the contract.
         return {
-            "version": base_version,
+            "version": snap.version,
             "n_touched": 0,
-            "n_carried": len(base_files),
+            "n_carried": len(snap.files),
         }
-    if not base_files:
+    if not snap.files:
         v = table.merge_upsert(updates, keys=[key], app_txn_id=app_txn_id)
         return {"version": v, "n_touched": 0, "n_carried": 0}
     # A non-empty delta whose key is all-NULL (lo None) equi-matches no
@@ -2082,21 +2056,14 @@ def merge_upsert_pruned(
         )
     else:
         merged = updates
-    adds = table._write_files(merged, snap)
-    table._validate_adds(adds)
-    if not table._try_commit(
-        base_version + 1, "merge_pruned", adds, touched, app_txn_id
-    ):
-        for name in adds:
-            (table.path / table.DATA_DIR / name).unlink(missing_ok=True)
-        raise TxnConflict(
-            f"pruned merge based on version {base_version} lost to a "
-            f"concurrent commit (now {table.latest_version()})"
-        )
+    v = table._commit(
+        snap, "merge_pruned", table._write_files(merged, snap), touched,
+        app_txn_id,
+    )
     return {
-        "version": base_version + 1,
+        "version": v,
         "n_touched": len(touched),
-        "n_carried": len(base_files) - len(touched),
+        "n_carried": len(snap.files) - len(touched),
     }
 
 
@@ -2138,7 +2105,7 @@ def merge_full_sync(
 
     Returns {"version", "n_touched", "n_carried", "n_dropped",
     "n_dv_files"}."""
-    if app_txn_id is not None and table.is_committed(app_txn_id):
+    if table._replayed(app_txn_id):
         return {
             "version": table.latest_version(),
             "n_touched": 0,
@@ -2147,7 +2114,6 @@ def merge_full_sync(
             "n_dv_files": 0,
         }
     snap = table.snapshot()
-    base_version, base_files, dvs = snap.version, snap.files, snap.dvs
     row = source.agg(
         F.min(key).alias("lo"), F.max(key).alias("hi")
     ).collect()[0]
@@ -2155,80 +2121,42 @@ def merge_full_sync(
     # an all-NULL source key (lo None) equi-matches nothing: every base
     # file is pure not-matched-by-source territory
     touched = [] if lo is None else _envelope_files(snap, key, lo, hi)
-    unmatched = sorted(set(base_files) - set(touched))
+    unmatched = sorted(set(snap.files) - set(touched))
+    deletes = (
+        None if delete_condition is None else table._satisfies(delete_condition)
+    )
     # ---- rewrite side: touched files' kept rows + every source row.
     # With no delete condition EVERY unmatched row deletes, so the
     # rewrite is exactly the source; with one, unmatched rows failing
     # the condition survive the rewrite.
-    if touched and delete_condition is not None:
+    if touched and deletes is not None:
         base = table._read_resolved(snap, touched)
-        kept = base.join(source.select(key), [key], "left_anti").where(
-            ~F.coalesce(
-                F.expr(delete_condition).cast("boolean"), F.lit(False)
-            )
-        )
+        kept = base.join(source.select(key), [key], "left_anti").where(~deletes)
         merged = kept.unionByName(source, allowMissingColumns=True)
     else:
         merged = source
     adds = table._write_files(merged, snap)
-    table._validate_adds(adds)
     # ---- delete-by-absence side on unmatched files
     removes = list(touched)
-    dv_adds: list[str] = []
-    dv_updates: dict[str, str] = {}
-    if unmatched:
-        if delete_condition is None:
-            # every row deletes: drop the files, move zero bytes
-            removes += unmatched
-        else:
-            with_pos = table._read_resolved(
-                snap, unmatched, with_positions=True
-            )
-            hits = with_pos.where(
-                F.coalesce(
-                    F.expr(delete_condition).cast("boolean"), F.lit(False)
-                )
-            ).select(
-                F.col("__file").alias("file"), F.col("__pos").alias("pos")
-            )
-            dv_touched = sorted(
-                r["file"] for r in hits.select("file").distinct().collect()
-            )
-            if dv_touched:
-                prior = [dvs[f] for f in dv_touched if f in dvs]
-                new_rows = hits
-                if prior:
-                    new_rows = new_rows.unionByName(
-                        table._dv_rows(prior).where(
-                            F.col("file").isin(dv_touched)
-                        )
-                    ).distinct()
-                dv_adds = list(table._write_files(new_rows.coalesce(1), snap))
-                dv_updates = {f: dv_adds[0] for f in dv_touched}
     extra: dict = {}
-    if dv_updates:
-        extra = {"dv_updates": dv_updates, "dv_files": dv_adds}
-    if not table._try_commit(
-        base_version + 1,
-        "merge_full_sync",
-        adds,
-        removes,
-        app_txn_id,
-        extra=extra,
-    ):
-        for name in [*adds, *dv_adds]:
-            (table.path / table.DATA_DIR / name).unlink(missing_ok=True)
-        raise TxnConflict(
-            f"full-sync merge based on version {base_version} lost to a "
-            f"concurrent commit (now {table.latest_version()})"
+    if unmatched and deletes is None:
+        # every row deletes: drop the files, move zero bytes
+        removes += unmatched
+    elif unmatched:
+        extra = table._stage_dv(
+            snap,
+            table._read_resolved(snap, unmatched, with_positions=True).where(
+                deletes
+            ),
         )
+    v = table._commit(snap, "merge_full_sync", adds, removes, app_txn_id, extra)
     return {
-        "version": base_version + 1,
+        "version": v,
         "n_touched": len(touched),
-        "n_carried": len(base_files) - len(touched)
-        - (len(unmatched) if delete_condition is None else 0),
-        "n_dropped": len(unmatched) if delete_condition is None else 0,
-        "n_dv_files": len(dv_updates),
+        "n_carried": len(snap.files) - len(touched)
+        - (len(unmatched) if deletes is None else 0),
+        "n_dropped": len(unmatched) if deletes is None else 0,
+        "n_dv_files": len(extra.get("dv_updates", {})),
     }
 
 
@@ -2300,15 +2228,10 @@ def set_bloom_filter(
             f"set_bloom_filter: column {column!r} is not in the "
             f"table's current schema"
         )
-    v = snap.version + 1
     # the era the (possibly name-only) declaration refers to — lets the
     # write path resolve the name through renames that happen later
-    decl["declared_at"] = v
-    if not table._try_commit(
-        v, "set_bloom_filter", [], [], None, extra={"bloom_filter": decl}
-    ):
-        raise TxnConflict("set_bloom_filter lost a version race")
-    return v
+    decl["declared_at"] = snap.version + 1
+    return table._commit(snap, "set_bloom_filter", extra={"bloom_filter": decl})
 
 
 def bloom_spec(table: TxnTable, version: int | None = None) -> dict[str, dict]:
@@ -2411,17 +2334,11 @@ def set_partition_transform(
     if kind in ("bucket", "truncate") and (n is None or n < 1):
         raise ValueError(f"{kind} transform requires n >= 1")
     spec = {"kind": kind, "col": col, **({"n": int(n)} if n else {})}
-    v = table.latest_version() + 1
-    if not table._try_commit(
-        v,
+    return table._commit(
+        table.snapshot(),
         "set_partition_transform",
-        [],
-        [],
-        None,
         extra={"partition_transform": spec},
-    ):
-        raise TxnConflict("set_partition_transform lost a version race")
-    return v
+    )
 
 
 def partition_transform(
@@ -2479,38 +2396,39 @@ def append_clustered(
     return table.append(out, app_txn_id=app_txn_id)
 
 
-def _transform_literals_multi(
-    table: TxnTable, specs: list[dict], values: list
-) -> list[list]:
-    """Evaluate EVERY spec's transform on the literal raw values
-    ENGINE-SIDE in one tiny job (one column per spec over a
-    len(values)-row frame) so pruning bounds are bit-identical to what
-    the writer computed — never a Python reimplementation of
-    xxhash64/datediff.  Literals are CAST to the table column's actual
-    type first: xxhash64 is type-sensitive (hash(42 AS int) !=
-    hash(42 AS bigint)), so hashing the Python-inferred type would
-    compute a different bucket than append_clustered wrote and silently
-    prune matching files.  Returns one value list per spec, in order."""
-    if not specs or not values:
-        return [[] for _ in specs]
-    dtypes = dict(table.read().dtypes)
-    df = table.spark.createDataFrame([(v,) for v in values], ["v"])
-    rows = df.select(
-        *[
-            _transform_column(
-                s,
-                F.col("v").cast(dtypes[s["col"]]),
-                dtypes[s["col"]],
-            ).alias(f"t{i}")
-            for i, s in enumerate(specs)
-        ]
+def _transform_bounds(
+    table: TxnTable, specs: list[dict], pairs: list[tuple], lower, upper
+) -> dict[tuple, tuple]:
+    """(spec index, type_json) pair -> the spec's transform of the raw
+    bounds, as (lower, upper) with None kept None, evaluated ENGINE-SIDE
+    in one tiny job (one column per pair, one row per given bound) so
+    pruning bounds are bit-identical to what the writer computed — never
+    a Python reimplementation of xxhash64/datediff.  Each bound is CAST
+    to the pair's type, the type the raw column had in the files being
+    pruned (``Snapshot.write_schema``): xxhash64 is type-sensitive
+    (hash(42 AS int) != hash(42 AS bigint)), so hashing any other type —
+    the Python-inferred one, or the widened read type after an int ->
+    bigint drift — computes a different bucket than append_clustered
+    wrote and silently prunes matching files."""
+    if not pairs:
+        return {}
+    cols = []
+    for i, tj in pairs:
+        dt = _struct_from_rec([["v", tj]])[0].dataType
+        cols.append(
+            _transform_column(specs[i], F.col("v").cast(dt), dt.simpleString())
+        )
+    vals = [v for v in (lower, upper) if v is not None]
+    rows = table.spark.createDataFrame([(v,) for v in vals], ["v"]).select(
+        *cols
     ).collect()
-    return [[r[f"t{i}"] for r in rows] for i in range(len(specs))]
-
-
-def _transform_literals(table: TxnTable, spec: dict, values: list):
-    """Single-spec convenience over _transform_literals_multi."""
-    return _transform_literals_multi(table, [spec], values)[0]
+    return {
+        p: (
+            rows[0][j] if lower is not None else None,
+            rows[-1][j] if upper is not None else None,
+        )
+        for j, p in enumerate(pairs)
+    }
 
 
 def prune_files_hidden(
@@ -2535,7 +2453,11 @@ def prune_files_hidden(
     equality probe prunes the old era through the day band AND the new
     era through the bucket, with zero per-file attribution bookkeeping
     (wrong-era stats simply don't exist under the probed name, and a
-    missing stat always reads conservatively)."""
+    missing stat always reads conservatively).
+
+    TYPE DRIFT: each file computed its transform under the raw column's
+    type in its own write batch, so files group by those recorded types
+    and each group prunes with bounds transformed under its own types."""
     snap = table.snapshot(version)
     spec = snap.transform
     if spec is None:
@@ -2556,19 +2478,27 @@ def prune_files_hidden(
             "bucket transform pruning requires an equality predicate "
             "(lower == upper)"
         )
-    preds: list[tuple] = [(spec["col"], lower, upper)]
-    # ONE 1-row-per-bound Spark job evaluates every usable era's
-    # transform (a column per spec), however many eras the table has
-    vals = [v for v in (lower, upper) if v is not None]
-    tcols = _transform_literals_multi(table, usable, vals)
-    for e, out in zip(usable, tcols):
-        if e["kind"] == "bucket":
-            preds.append((_hidden_name(e), out[0], out[0]))
-        else:
-            tlo = out[0] if lower is not None else None
-            thi = out[-1] if upper is not None else None
-            preds.append((_hidden_name(e), tlo, thi))
-    return snap.prune(preds)
+    # files group by the raw column's write type under each usable spec
+    # whose hidden column they carry (files without one have no stat)
+    groups: dict[tuple, list[str]] = {}
+    for f in snap.files:
+        rec = dict(snap.write_schema(f))
+        key = tuple(
+            (i, rec[e["col"]])
+            for i, e in enumerate(usable)
+            if _hidden_name(e) in rec
+        )
+        groups.setdefault(key, []).append(f)
+    # ONE Spark job evaluates every (spec, type) pair's bounds
+    pairs = sorted({p for key in groups for p in key})
+    bounds = _transform_bounds(table, usable, pairs, lower, upper)
+    kept: set[str] = set()
+    for key, fs in groups.items():
+        preds = [(spec["col"], lower, upper)] + [
+            (_hidden_name(usable[i]), *bounds[(i, t)]) for i, t in key
+        ]
+        kept.update(set(fs) & set(snap.prune(preds)))
+    return [f for f in snap.files if f in kept]
 
 
 def read_pruned_hidden(

@@ -21,6 +21,12 @@ from pyspark.sql import SparkSession
 DEFAULT_APP_NAME = "aws-genaric-datapipeline-spark"
 
 
+def _default_driver_memory() -> str:
+    """min(24g, half of the host's physical memory), in MiB."""
+    half = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2
+    return f"{min(24 << 30, half) >> 20}m"
+
+
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
@@ -67,9 +73,14 @@ def get_spark(
         # local[32] runs every task inside the driver JVM: size the heap for
         # 32 concurrent task slots (spark.memory.fraction 0.6 → ~0.5 GiB of
         # execution memory per slot at 24g) or erratic GC pauses dominate
-        # bench timings.  On a real cluster executors get their own memory;
-        # this knob only shapes the single-JVM harness.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # bench timings — but never past half the host's memory, or the
+        # JVM can grow into memory other processes need.  On a real
+        # cluster executors get their own memory; this knob only shapes
+        # the single-JVM harness.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.maxMetadataStringLength", "500")
     )

@@ -310,6 +310,22 @@ class TestConfig:
         b = make_batch_id()
         assert len(b) == 20 and b.isdigit()
 
+    def test_driver_heap_default_fits_the_host(self, spark):
+        """Unless SPARK_GRAFT_DRIVER_MEM overrides it, the session heap is
+        min(24g, half the host's physical memory): never more than the
+        host has."""
+        from aws_genaric_datapipeline_spark.queries.corpus_curation import (
+            _parse_jvm_mem,
+        )
+
+        mem = spark.sparkContext.getConf().get("spark.driver.memory")
+        override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        if override:
+            assert mem == override
+        else:
+            phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+            assert 0 < _parse_jvm_mem(mem) <= phys
+
 
 class TestSchemaValidation:
     def test_missing_declared_column_fails(self, spark, cfg):

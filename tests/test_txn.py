@@ -249,6 +249,66 @@ class TestHygiene:
         assert hist[1]["op"] == "overwrite" and hist[1]["n_removes"] >= 1
 
 
+def _lost_race_ops():
+    from aws_genaric_datapipeline_spark.pipeline import txn as T
+
+    def keys(spark):
+        return spark.createDataFrame([(1,)], "k bigint")
+
+    return {
+        "append": lambda s, t: t.append(_df(s, [(9, "z")])),
+        "overwrite": lambda s, t: t.overwrite(_df(s, [(9, "z")])),
+        "merge_upsert": lambda s, t: t.merge_upsert(_df(s, [(1, "A")]), ["k"]),
+        "delete_keys": lambda s, t: t.delete_keys(keys(s), ["k"]),
+        "delete_keys_dv": lambda s, t: t.delete_keys_dv(keys(s), ["k"]),
+        "compact": lambda s, t: T.compact(t),
+        "cluster_zorder": lambda s, t: T.cluster_zorder(t, "k", "k"),
+        "cluster_incremental": lambda s, t: T.cluster_incremental(t, "k", "k"),
+        "merge_upsert_pruned": lambda s, t: T.merge_upsert_pruned(
+            t, _df(s, [(1, "A")]), "k"
+        ),
+        "merge_full_sync": lambda s, t: T.merge_full_sync(
+            t, _df(s, [(1, "A")]), "k"
+        ),
+        "merge_full_sync_condition": lambda s, t: T.merge_full_sync(
+            t, _df(s, [(1, "A")]), "k", delete_condition="k >= 3"
+        ),
+        "restore_version": lambda s, t: T.restore_version(t, 1),
+        "set_constraint": lambda s, t: t.set_constraint("k_pos", "k > 0"),
+        "drop_constraint": lambda s, t: t.drop_constraint("k_pos"),
+        "set_bloom_filter": lambda s, t: T.set_bloom_filter(t, "k"),
+        "set_partition_transform": lambda s, t: T.set_partition_transform(
+            t, "bucket", "k", n=4
+        ),
+        "rename_column": lambda s, t: t.rename_column("v", "vv"),
+    }
+
+
+class TestLostRace:
+    """With the publish seam forced to lose, every write op raises
+    TxnConflict, publishes no version and leaves no staged data or
+    deletion-vector file behind.  One two-commit table serves every op:
+    a losing op changes nothing."""
+
+    @pytest.fixture(scope="class")
+    def seeded(self, spark, tmp_path_factory):
+        t = TxnTable(spark, str(tmp_path_factory.mktemp("lost_race") / "tbl"))
+        t.append(_df(spark, [(1, "a"), (2, "b")]))
+        t.append(_df(spark, [(3, "c")]))
+        return t
+
+    @pytest.mark.parametrize("op", sorted(_lost_race_ops()))
+    def test_lost_race_raises_and_leaves_nothing(
+        self, spark, seeded, monkeypatch, op
+    ):
+        before = seeded.latest_version()
+        monkeypatch.setattr(seeded, "_try_commit", lambda *a, **k: False)
+        with pytest.raises(TxnConflict):
+            _lost_race_ops()[op](spark, seeded)
+        assert seeded.latest_version() == before
+        assert seeded.vacuum() == []
+
+
 class TestStreamingSink:
     def test_exactly_once_under_batch_replay(self, spark, table, tmp_path):
         """Drive a real file-source stream into the table through
@@ -1642,7 +1702,7 @@ class TestCheckConstraints:
         """A set_constraint landing between an append's validation and its
         winning commit must still gate that batch: simulate the race by
         committing the constraint through a SECOND handle the moment the
-        appender first calls constraints() inside its retry loop."""
+        appender's first validation returns."""
         from aws_genaric_datapipeline_spark.pipeline.txn import (
             ConstraintViolation,
             TxnTable,
@@ -1651,23 +1711,23 @@ class TestCheckConstraints:
         table.append(_df(spark, [(1, "a")]))
         other = TxnTable(spark, str(table.path))
         calls = {"n": 0}
-        orig = table.constraints
+        orig = table._validate_adds
 
-        def racy_constraints(*a, **kw):
-            # call 1 = the pre-loop _validate_adds (sees no constraints);
-            # call 2 = the retry loop's drift check — land the concurrent
-            # set_constraint exactly there
+        def racy_validate(adds, live):
+            # call 1 = the first attempt's validation (sees no
+            # constraints); land the concurrent set_constraint right
+            # after it, before that attempt publishes
+            orig(adds, live)
             calls["n"] += 1
-            if calls["n"] == 2:
+            if calls["n"] == 1:
                 other.set_constraint("k_positive", "k > 0")
-            return orig(*a, **kw)
 
-        table.constraints = racy_constraints
+        table._validate_adds = racy_validate
         try:
             with pytest.raises(ConstraintViolation, match="k_positive"):
                 table.append(_df(spark, [(-7, "bad")]))
         finally:
-            table.constraints = orig
+            table._validate_adds = orig
         # nothing from the rejected batch is visible
         assert _rows(table.read()) == {(1, "a")}
 
@@ -2059,11 +2119,11 @@ class TestMergeFullSync:
         orig = table._validate_adds
         fired = {"done": False}
 
-        def racy_validate(adds):
+        def racy_validate(adds, live):
             if not fired["done"]:
                 fired["done"] = True
                 other.append(_df(spark, [(500, "concurrent")]))
-            return orig(adds)
+            return orig(adds, live)
 
         table._validate_adds = racy_validate
         try:
@@ -2181,6 +2241,31 @@ class TestHiddenPartitionTransforms:
         assert got == {(7, "v7")}
         with pytest.raises(ValueError, match="equality"):
             prune_files_hidden(table, 3, 9)
+
+    def test_bucket_pruning_survives_int_to_bigint_drift(self, spark, table):
+        """Each file hashed the bucket under its own batch's key type
+        (xxhash64 of an int differs from that of the same bigint), so a
+        probe transforms its literal under every file's recorded type —
+        not the widened read type — and finds int-era keys again; pinned
+        versions use their own files' types."""
+        from aws_genaric_datapipeline_spark.pipeline.txn import (
+            append_clustered,
+            prune_files_hidden,
+            read_pruned_hidden,
+            set_partition_transform,
+        )
+
+        set_partition_transform(table, "bucket", "k", n=16)
+        append_clustered(
+            table, spark.range(200).selectExpr("CAST(id AS INT) AS k"), 8
+        )
+        v_int = table.latest_version()
+        append_clustered(table, spark.range(200, 400).selectExpr("id AS k"), 8)
+        assert dict(table.read().dtypes)["k"] == "bigint"
+        for k in (0, 50, 100, 150, 199, 300):
+            assert read_pruned_hidden(table, k, k).count() == 1, k
+        assert len(prune_files_hidden(table, 7, 7)) < len(table.live_files())
+        assert read_pruned_hidden(table, 42, 42, version=v_int).count() == 1
 
     def test_transform_survives_expiry_and_plain_appends_stay_correct(
         self, spark, table
