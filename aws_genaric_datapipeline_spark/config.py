@@ -18,16 +18,114 @@ from __future__ import annotations
 
 import json
 import os
+import re
 from dataclasses import dataclass, field
 from pathlib import Path
 
 import pyspark.sql.types as T
 
+# Spark DDL primitive type names (case-insensitive) and their types.
+_PRIMITIVES = {
+    "boolean": T.BooleanType,
+    "tinyint": T.ByteType,
+    "byte": T.ByteType,
+    "smallint": T.ShortType,
+    "short": T.ShortType,
+    "int": T.IntegerType,
+    "integer": T.IntegerType,
+    "bigint": T.LongType,
+    "long": T.LongType,
+    "float": T.FloatType,
+    "real": T.FloatType,
+    "double": T.DoubleType,
+    "string": T.StringType,
+    "binary": T.BinaryType,
+    "date": T.DateType,
+    "timestamp": T.TimestampType,
+    "timestamp_ltz": T.TimestampType,
+    "timestamp_ntz": T.TimestampNTZType,
+}
+_DDL_TOKEN = re.compile(r"\s*(`(?:[^`]|``)*`|[A-Za-z_]\w*|\d+|[<>(),:])")
+
+
+def parse_type(text: str) -> T.DataType:
+    """Parse a Spark DDL type string — a primitive, ``decimal(p[,s])``, or
+    nested ``array<T>``, ``map<K,V>`` and ``struct<name[:]T, ...>`` — the
+    way ``StructType.fromDDL`` does (every field, element and value
+    nullable), but in Python: no Spark session or JVM call is needed.
+    Raises ValueError on an unknown type or malformed string."""
+    toks, pos = [], 0
+    while text[pos:].strip():
+        m = _DDL_TOKEN.match(text, pos)
+        if m is None:
+            raise ValueError(f"cannot parse type {text!r} at offset {pos}")
+        toks.append(m.group(1))
+        pos = m.end()
+
+    def take(i: int, want: str | None = None) -> tuple[str, int]:
+        if i >= len(toks) or (want is not None and toks[i] != want):
+            got = toks[i] if i < len(toks) else "end of string"
+            raise ValueError(f"type {text!r}: expected {want or 'a type'}, got {got!r}")
+        return toks[i], i + 1
+
+    def one(i: int) -> tuple[T.DataType, int]:
+        name, i = take(i)
+        kind = name.lower()
+        if kind in _PRIMITIVES:
+            return _PRIMITIVES[kind](), i
+        if kind in ("decimal", "dec", "numeric"):
+            prec, scale = 10, 0
+            if i < len(toks) and toks[i] == "(":
+                p, i = take(i + 1)
+                prec, scale = int(p), 0
+                if toks[i : i + 1] == [","]:
+                    sc, i = take(i + 1)
+                    scale = int(sc)
+                _, i = take(i, ")")
+            if not 1 <= prec <= 38 or not 0 <= scale <= prec:
+                raise ValueError(f"type {text!r}: invalid decimal({prec},{scale})")
+            return T.DecimalType(prec, scale), i
+        if kind == "array":
+            _, i = take(i, "<")
+            elem, i = one(i)
+            _, i = take(i, ">")
+            return T.ArrayType(elem, True), i
+        if kind == "map":
+            _, i = take(i, "<")
+            key, i = one(i)
+            _, i = take(i, ",")
+            val, i = one(i)
+            _, i = take(i, ">")
+            return T.MapType(key, val, True), i
+        if kind == "struct":
+            _, i = take(i, "<")
+            fields = []
+            while toks[i : i + 1] != [">"]:
+                if fields:
+                    _, i = take(i, ",")
+                fname, i = take(i)
+                if fname in "<>(),:":
+                    raise ValueError(f"type {text!r}: expected a field name, got {fname!r}")
+                if fname.startswith("`"):
+                    fname = fname[1:-1].replace("``", "`")
+                if toks[i : i + 1] == [":"]:
+                    i += 1
+                ftype, i = one(i)
+                fields.append(T.StructField(fname, ftype, True))
+            _, i = take(i, ">")
+            return T.StructType(fields), i
+        raise ValueError(f"unknown type {name!r} in {text!r}")
+
+    dtype, end = one(0)
+    if end != len(toks):
+        raise ValueError(f"type {text!r}: unexpected {toks[end]!r}")
+    return dtype
+
 
 @dataclass(frozen=True)
 class ColumnSpec:
     name: str
-    type: str  # Spark DDL type string: string, bigint, decimal(12,2), array<float>, ...
+    type: str  # Spark DDL type string (parse_type): string, bigint, decimal(12,2), array<float>, ...
     comment: str = ""
 
 
@@ -87,8 +185,9 @@ class PipelineConfig:
         """Parse declared column specs into a StructType (None if no schema)."""
         if not self.schema:
             return None
-        ddl = ", ".join(f"{c.name} {c.type}" for c in self.schema)
-        return T.StructType.fromDDL(ddl)
+        return T.StructType(
+            [T.StructField(c.name, parse_type(c.type), True) for c in self.schema]
+        )
 
 
 def _source_from_dict(d: dict) -> SourceSpec:

@@ -9,20 +9,22 @@ projection.  The near-dup paths follow the standard two-stage shape:
   → verification (exact Jaccard on the candidate pairs only)
 
 which is how near-dedup stays ~O(N·bands) instead of O(N²) at 100 TB.
-No Python UDFs: hashing is xxhash64 (JVM), set ops are higher-order array
-functions.
+Shingling is a JVM regexp (text.word_ngram_set), hashing is xxhash64 (JVM),
+set ops are higher-order array functions.  Only winnow_near_pairs starts a
+Python worker: its rolling-hash kernel (text.winnow_fingerprints_udf) has
+no efficient built-in form.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 
 from aws_genaric_datapipeline_spark.operators.partitioning import ensure_parallelism
 from aws_genaric_datapipeline_spark.operators.text import (
     fingerprint,
     tokens,
-    word_ngrams_udf,
+    word_ngram_set,
 )
 
 
@@ -379,13 +381,12 @@ def _token_sets(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(id, token) pairs with distinct n-gram shingles per document."""
     df = ensure_parallelism(df)
     # Per-doc distinctness happens inside the shingle expression (JVM
-    # array_distinct for unigrams, in-batch dedup in the pandas UDF for
-    # n-grams), so the exploded pairs are distinct by construction — no
-    # (did, tok) dropDuplicates shuffle of gram strings.
+    # array_distinct in both forms), so the exploded pairs are distinct by
+    # construction — no (did, tok) dropDuplicates shuffle of gram strings.
     shingle = (
         F.array_distinct(tokens(F.col(text_col)))
         if n == 1
-        else word_ngrams_udf(n, distinct=True)(F.col(text_col))
+        else word_ngram_set(F.col(text_col), n)
     )
     return df.select(F.col(id_col).alias("did"), F.explode(shingle).alias("tok"))
 
@@ -452,7 +453,7 @@ def jaccard_pairs(
 
     # The exploded-shingle frame feeds several subtrees (document
     # frequencies, the prefix projection, verify arrays, set sizes);
-    # persist it so the shingle UDF and explode run once, not five times —
+    # persist it so the shingling and explode run once, not five times —
     # measured ~2x end-to-end at sf0.1 on the threshold-0.5 graph-edge
     # build.  MEMORY_AND_DISK: at 100 TB the frame must spill, not OOM.
     # Cache lifetime: the frames stay persisted so the RETURNED plan stays
@@ -475,10 +476,13 @@ def jaccard_pairs(
         # the final size joins): sorting the (tok_df, tok) structs in-array
         # IS the prefix rank, the array length IS the set size, and a
         # transform projects the verify array — so `docs` carries
-        # everything each later stage needs, keyed by document.
-        doc_freq = sets.groupBy("tok").agg(F.count(F.lit(1)).alias("tok_df"))
+        # everything each later stage needs, keyed by document.  The
+        # document frequency is a window count over tok, which costs one
+        # exchange of `sets`; an aggregate joined back would cost two.
         docs = (
-            sets.join(doc_freq, "tok")
+            sets.withColumn(
+                "tok_df", F.count(F.lit(1)).over(Window.partitionBy("tok"))
+            )
             .groupBy("did")
             .agg(F.array_sort(F.collect_list(F.struct("tok_df", "tok"))).alias("arr"))
             .select(
@@ -598,10 +602,10 @@ def _collapse_by_shingle_set(
     identity travels as one extra 8-byte column on the exploded frame, and
     membership is recovered with scalar-only aggregations (the per-doc
     groupBy carries one partially-aggregated row per doc).  Everything
-    derives from ONE shingled pass; persist it so the shingle UDF runs
+    derives from ONE shingled pass; persist it so the shingling runs
     once (measured 2x end-to-end at sf0.1).  MEMORY_AND_DISK: at 100 TB
     the frame exceeds memory and must spill, not OOM.  Distinctness comes
-    from the in-batch dedup inside the shingle UDF, so no (did, tok)
+    from the array_distinct inside the shingle expression, so no (did, tok)
     dropDuplicates shuffle of gram strings exists anywhere in this
     pipeline.
     """
@@ -611,7 +615,7 @@ def _collapse_by_shingle_set(
         ensure_parallelism(df)
         .select(
             F.col(id_col).alias("did"),
-            word_ngrams_udf(shingle_n, distinct=True)(F.col(text_col)).alias("sh"),
+            word_ngram_set(F.col(text_col), shingle_n).alias("sh"),
         )
         .select(
             "did",

@@ -69,6 +69,23 @@ def word_ngrams(text: Column, n: int) -> Column:
     )
 
 
+def word_ngram_set(text: Column, n: int) -> Column:
+    """Distinct word n-gram shingles as an array<string>, first occurrence
+    first — the set form of ``word_ngrams`` for Jaccard/near-dup shingling.
+
+    Pure JVM regexp (no Python worker): collapse every ASCII whitespace run
+    to one space, then match a zero-width lookahead at each token start
+    that captures the next ``n`` tokens.  Tokens are the maximal non-\\s
+    runs, so leading/trailing whitespace yields no empty token, a document
+    with fewer than ``n`` tokens yields ``[]``, and NULL text yields ``[]``.
+    """
+    norm = F.regexp_replace(text, r"\s+", " ")
+    grams = F.regexp_extract_all(
+        norm, F.lit(rf"(?<!\S)(?=(\S+(?: \S+){{{n - 1}}}))"), F.lit(1)
+    )
+    return F.coalesce(F.array_distinct(grams), F.array().cast("array<string>"))
+
+
 def bm25_scores(
     df: DataFrame,
     terms: tuple[str, ...],
@@ -847,42 +864,6 @@ def winnow_fingerprints_udf(k: int = 25, w: int = 10):
     break matches.
     """
     return F.pandas_udf("array<bigint>")(winnow_batch_fn(k, w))
-
-
-def word_ngrams_udf(n: int, distinct: bool = False):
-    """Word n-gram shingles as an Arrow-batched pandas UDF.
-
-    Semantics identical to ``word_ngrams`` (space-joined windows over
-    whitespace tokens), but vectorized Python string ops instead of JVM
-    higher-order functions: the HOF form evaluates concat_ws/slice lambdas
-    interpreted per array element, measured ~3x slower end-to-end on the
-    MinHash path at sf0.1.  Use the HOF form only where a column expression
-    is required (oracle-SQL parity paths); use this in shingling hot paths.
-
-    ``distinct=True`` dedups shingles inside the batch (first occurrence
-    kept) — set-semantics consumers (Jaccard, decontamination) get distinct
-    (doc, gram) pairs straight off the map side, with no
-    ``dropDuplicates`` shuffle of gram strings at all.
-    """
-
-    import re
-
-    # ASCII \s to match the JVM regex in tokens() (and the DuckDB oracles);
-    # Python's bare str.split() would also split on unicode whitespace.
-    ws = re.compile(r"\s+", re.ASCII)
-
-    def one(s: str | None) -> list[str]:
-        w = [t for t in ws.split(s or "") if t]
-        if len(w) < n:
-            return []
-        grams = [" ".join(w[i : i + n]) for i in range(len(w) - n + 1)]
-        return list(dict.fromkeys(grams)) if distinct else grams
-
-    @F.pandas_udf("array<string>")
-    def _ngrams(texts: pd.Series) -> pd.Series:
-        return texts.map(one)
-
-    return _ngrams
 
 
 # ------------------------------------------------------------- PII redaction

@@ -319,7 +319,9 @@ class Snapshot:
     version its predicate was set; ``blooms`` maps a column to its
     {m, k[, field_id, declared_at]} declaration; ``transform`` is the
     partition-transform spec in force and ``transform_history`` every
-    spec ever declared, deduplicated by hidden column name."""
+    spec ever declared, deduplicated by hidden column name; ``clustered``
+    are the live files a retained cluster/cluster_incremental commit
+    added."""
 
     version: int
     files: tuple[str, ...]
@@ -332,6 +334,7 @@ class Snapshot:
     blooms: dict[str, dict]
     transform: dict | None
     transform_history: tuple[dict, ...]
+    clustered: frozenset[str]
 
     @property
     def fields(self) -> list[dict]:
@@ -624,6 +627,7 @@ class TxnTable:
         blooms: dict[str, dict] = {}
         ptf: dict | None = None
         hist: list[dict] = []
+        clustered: set[str] = set()
         for i, c in enumerate(self.commits_iter(newest_first=False)):
             n = c["version"]
             if i == 0 and c.get("base") and v < n:
@@ -647,6 +651,8 @@ class TxnTable:
                 ptf = c["partition_transform"]
                 hist.append(ptf)
             live = (live - set(c["removes"])) | set(c["adds"])
+            if c.get("op") in ("cluster", "cluster_incremental"):
+                clustered.update(c["adds"])
             # a removed data file's vector goes with it (the rewrite
             # applied it); dv_updates install or replace vectors, and a
             # None value is restore_version's explicit clear marker
@@ -700,6 +706,7 @@ class TxnTable:
             blooms=blooms,
             transform=ptf,
             transform_history=tuple(uniq.values()),
+            clustered=frozenset(clustered.intersection(files)),
         )
 
     def live_files(self, version: int | None = None) -> list[str]:
@@ -1723,13 +1730,7 @@ def cluster_incremental(
             "n_untouched": len(table.live_files()),
         }
     snap = table.snapshot()
-    clustered_files = {
-        f
-        for c in table.commits_iter()
-        if c["op"] in ("cluster", "cluster_incremental")
-        for f in c["adds"]
-    }
-    tail = [f for f in snap.files if f not in clustered_files]
+    tail = [f for f in snap.files if f not in snap.clustered]
     if not tail:
         return {
             "version": snap.version,
@@ -2458,7 +2459,11 @@ def prune_files_hidden(
     TYPE DRIFT: each file computed its transform under the raw column's
     type in its own write batch, so files group by those recorded types
     and each group prunes with bounds transformed under its own types."""
-    snap = table.snapshot(version)
+    return _prune_hidden(table, table.snapshot(version), lower, upper)
+
+
+def _prune_hidden(table: TxnTable, snap: Snapshot, lower, upper) -> list[str]:
+    """prune_files_hidden over an already-folded snapshot."""
     spec = snap.transform
     if spec is None:
         raise ValueError("table has no partition transform declared")
@@ -2511,7 +2516,7 @@ def read_pruned_hidden(
     the hidden transform: open only prune_files_hidden's files, then
     apply the exact raw predicate on top."""
     snap = table.snapshot(version)
-    chosen = prune_files_hidden(table, lower, upper, snap.version)
+    chosen = _prune_hidden(table, snap, lower, upper)
     df = table._read_resolved(snap, chosen)
     col = F.col(snap.transform["col"])
     # the exact filter follows the PREDICATE shape, not the current

@@ -10,6 +10,14 @@ Design notes (100 TB posture):
 - ``spark.sql.shuffle.partitions`` is only the pre-AQE upper bound; AQE
   coalesces down.  On a real cluster set it ≈ 2-3× total cores via
   SPARK_GRAFT_SHUFFLE_PARTITIONS.
+- Cached plans are coalesced too
+  (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``).  Spark's
+  default keeps a persisted frame at the full shuffle-partition count so
+  its output partitioning stays fixed, and then every later scan of it
+  runs that many tasks (32 tasks over a few hundred rows in the near-dup
+  edge build).  The trade-off: a cached frame's partitioning is now only
+  known once it is built, so a read that needs a particular partitioning
+  may plan one more shuffle over the (small, coalesced) cached data.
 """
 
 from __future__ import annotations
@@ -52,6 +60,9 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # ...and let AQE size persisted frames' final stages the same way
+        # (see the design notes above).
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Runtime row-level filtering: build a bloom filter from the small
         # side of a shuffle join and push it into the big side's scan —
         # the biggest win on selective fact⋈dim joins at scale.

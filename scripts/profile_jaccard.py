@@ -21,6 +21,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 from pyspark import StorageLevel  # noqa: E402
 
@@ -37,9 +38,8 @@ def noop(df):
 
 
 def docs_frame(sets, threshold):
-    doc_freq = sets.groupBy("tok").agg(F.count(F.lit(1)).alias("tok_df"))
     return (
-        sets.join(doc_freq, "tok")
+        sets.withColumn("tok_df", F.count(F.lit(1)).over(Window.partitionBy("tok")))
         .groupBy("did")
         .agg(F.array_sort(F.collect_list(F.struct("tok_df", "tok"))).alias("arr"))
         .select(

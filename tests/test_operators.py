@@ -2477,6 +2477,103 @@ class TestJaccardPrefixFilters:
         assert pairs == {(1, 2): 0.8}
 
 
+def _ref_ngram_set(s, n):
+    """Pure-Python reference shingling: distinct space-joined windows of
+    ASCII-whitespace tokens, first occurrence first."""
+    import re
+
+    w = [t for t in re.split(r"\s+", s or "", flags=re.ASCII) if t]
+    return list(dict.fromkeys(" ".join(w[i : i + n]) for i in range(len(w) - n + 1)))
+
+
+class TestShingleSet:
+    """The JVM n-gram set expression every near-dup path shingles with:
+    same grams as the Python reference, no Python worker in the plans,
+    and a deterministic job/task budget for the edge build."""
+
+    EDGE_ROWS = [
+        None,
+        "",
+        "a\tb\x0bc\x0cd\re\nf g",
+        "   lead and trail runs   ",
+        "two words",
+        "x y x y x y x y",
+        "nbsp stays one\x1ctoken here",
+        "the quick brown fox jumps over the lazy dog the quick brown",
+    ]
+
+    @pytest.mark.parametrize("n", [1, 2, 3, 5])
+    def test_matches_python_reference(self, spark, n):
+        from aws_genaric_datapipeline_spark.operators.text import word_ngram_set
+
+        df = spark.createDataFrame(
+            list(enumerate(self.EDGE_ROWS)), "i int, text string"
+        )
+        got = {
+            r["i"]: r["g"]
+            for r in df.select("i", word_ngram_set(F.col("text"), n).alias("g")).collect()
+        }
+        want = {i: _ref_ngram_set(s, n) for i, s in enumerate(self.EDGE_ROWS)}
+        assert got == want
+
+    def test_no_python_eval_in_plans(self, spark):
+        from aws_genaric_datapipeline_spark.plans import explain_str
+
+        df = spark.createDataFrame(
+            list(enumerate(self.EDGE_ROWS)), "doc_id long, text string"
+        )
+        members, sets = D._collapse_by_shingle_set(df, "doc_id", "text", 3)
+        try:
+            for out in (
+                D._token_sets(df, "doc_id", "text", 3),
+                D.jaccard_pairs(df, n=3, threshold=0.5),
+                D.jaccard_pairs(df, n=3, threshold=0.5, hash_tokens=True),
+                members,
+                sets,
+            ):
+                plan = explain_str(out)
+                assert "ArrowEvalPython" not in plan, plan[:2000]
+                assert "BatchEvalPython" not in plan, plan[:2000]
+        finally:
+            members.unpersist()
+            sets.unpersist()
+
+    # Jobs and tasks (build + action) of one jaccard_pairs call on the
+    # fixed corpus below, at the shared test session's settings.  Both
+    # counts are deterministic on a fixed input, so this is a hard budget
+    # (measured: 11 jobs, 25 tasks).
+    JOB_BUDGET = 11
+    TASK_BUDGET = 30
+
+    def test_job_budget(self, spark):
+        words = [f"w{i}" for i in range(30)]
+        df = spark.createDataFrame(
+            [
+                (d, " ".join(words[(d * 7 + k) % 30] for k in range(12 + d % 5)))
+                for d in range(60)
+            ],
+            "doc_id long, text string",
+        )
+        sc = spark.sparkContext
+        group = "job-budget-jaccard_pairs"
+        sc.setJobGroup(group, "jaccard_pairs")
+        try:
+            D.jaccard_pairs(df, n=3, threshold=0.5, hash_tokens=True).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        st = sc.statusTracker()
+        jobs = st.getJobIdsForGroup(group)
+        tasks = sum(
+            si.numCompletedTasks + si.numFailedTasks
+            for j in jobs
+            for si in map(st.getStageInfo, st.getJobInfo(j).stageIds)
+            if si is not None
+        )
+        assert len(jobs) <= self.JOB_BUDGET, f"{len(jobs)} jobs"
+        assert tasks <= self.TASK_BUDGET, f"{tasks} tasks"
+
+
 class TestSubwordTokenize:
     def _streams(self, spark, texts):
         from aws_genaric_datapipeline_spark.operators.text import subword_tokenize

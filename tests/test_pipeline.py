@@ -9,10 +9,14 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import subprocess
+import sys
 import time
 import uuid
+from pathlib import Path
 
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 import pytest
 
 from aws_genaric_datapipeline_spark.catalog import register_temp_view
@@ -300,6 +304,52 @@ class TestConfig:
         found = discover_pipelines(tmp_path / "pipelines")
         assert set(found) == {"tableB"}
         assert found["tableB"].declared_struct().fields[0].dataType.simpleString() == "bigint"
+
+    # Every declared type string the tests and perfbench use, plus each
+    # primitive parse_type knows and the nested forms it accepts.
+    DDL_TYPES = [
+        "string", "bigint", "double", "int", "timestamp",
+        "boolean", "tinyint", "byte", "smallint", "short", "integer", "long",
+        "float", "real", "binary", "date", "timestamp_ltz", "timestamp_ntz",
+        "BIGINT", "decimal", "decimal(12,2)", "dec(5)", "numeric(38, 38)",
+        "array<float>", "array<array<int>>", "map<string, array<bigint>>",
+        "struct<a:int, b string, `c d`: array<struct<e:date>>>", "struct<>",
+    ]
+
+    @pytest.mark.parametrize("ddl", DDL_TYPES)
+    def test_parse_type_matches_spark_ddl(self, spark, ddl):
+        from aws_genaric_datapipeline_spark.config import parse_type
+
+        want = T.StructType.fromDDL(f"x {ddl}").fields[0].dataType
+        assert parse_type(ddl) == want
+
+    @pytest.mark.parametrize(
+        "ddl", ["strin", "array<int", "map<int>", "decimal(39,0)", "int int", "", "struct<:int>"]
+    )
+    def test_parse_type_rejects_bad_strings(self, ddl):
+        from aws_genaric_datapipeline_spark.config import parse_type
+
+        with pytest.raises(ValueError):
+            parse_type(ddl)
+
+    def test_declared_struct_needs_no_spark_session(self):
+        """Config parsing runs before any session exists (CLI discovery,
+        deployment tooling): the declared schema parses in Python."""
+        code = (
+            "from pyspark import SparkContext\n"
+            "from aws_genaric_datapipeline_spark.config import parse_config\n"
+            "cfg = parse_config({'job_src': 'j', 'raw_path': '/r', 'prepared_path': '/p',\n"
+            "    'state_path': '/s', 'schema': [{'name': 'a', 'type': 'decimal(12,2)'},\n"
+            "    {'name': 'b', 'type': 'array<string>'}]})\n"
+            "print(cfg.declared_struct().simpleString())\n"
+            "assert SparkContext._active_spark_context is None\n"
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", code], capture_output=True, text=True, timeout=120,
+            cwd=str(Path(__file__).resolve().parent.parent),
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        assert out.stdout.strip() == "struct<a:decimal(12,2),b:array<string>>"
 
     def test_unknown_template_rejected(self, spark, cfg):
         bad = PipelineConfig(**{**cfg.__dict__, "template": "nope"})

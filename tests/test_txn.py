@@ -1641,6 +1641,29 @@ class TestClusterIncremental:
         out2 = cluster_incremental(table, "x", "y", app_txn_id="ci1")
         assert out2["n_clustered"] == 0 and v1 == table.latest_version()
 
+    def test_reads_the_log_once(self, spark, table, monkeypatch):
+        """The clustered files come from the snapshot fold: the commit log
+        is walked once, not a second time to find cluster commits."""
+        from aws_genaric_datapipeline_spark.pipeline.txn import (
+            cluster_incremental,
+            cluster_zorder,
+        )
+
+        table.append(self._grid(spark, 0, 8).repartition(2))
+        cluster_zorder(table, "x", "y", num_files=2, bits=4)
+        clustered = set(table.live_files())
+        table.append(self._grid(spark, 8, 12).repartition(2))
+        walks = []
+        orig = table.commits_iter
+        monkeypatch.setattr(
+            table, "commits_iter", lambda *a, **k: walks.append(1) or orig(*a, **k)
+        )
+        assert table.snapshot().clustered == frozenset(clustered)
+        walks.clear()
+        out = cluster_incremental(table, "x", "y", num_files=1, bits=4)
+        assert out["n_clustered"] == 2 and out["n_untouched"] == 2
+        assert len(walks) == 1
+
 
 class TestCheckConstraints:
     """Delta-style CHECK constraints: metadata commits, batch-sized
@@ -2210,6 +2233,25 @@ class TestHiddenPartitionTransforms:
             .collect()
         }
         assert got == want and len(got) == 12
+
+    def test_pruned_read_folds_the_log_once(self, spark, table, monkeypatch):
+        from aws_genaric_datapipeline_spark.pipeline.txn import (
+            append_clustered,
+            read_pruned_hidden,
+            set_partition_transform,
+        )
+
+        set_partition_transform(table, "days", "ts")
+        append_clustered(table, self._ts_df(spark), num_files=4)
+        folds = []
+        orig = table.snapshot
+        monkeypatch.setattr(
+            table, "snapshot", lambda *a, **k: folds.append(1) or orig(*a, **k)
+        )
+        import datetime as dt
+
+        read_pruned_hidden(table, dt.datetime(2024, 3, 2), dt.datetime(2024, 3, 3))
+        assert len(folds) == 1
 
     def test_bucket_layout_prunes_equality_where_minmax_cannot(
         self, spark, table
